@@ -25,7 +25,7 @@ matched unanchored against the message (batch semantic, Skew-2 decision).
 from __future__ import annotations
 
 import re
-from collections.abc import Iterable, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -63,15 +63,3 @@ def tag_events(
 ) -> DataFrame:
     """Attach the first-match-wins EventId column."""
     return df.withColumn(out_col, event_id_expr(templates, F.col(message_col)))
-
-
-def load_templates(spark, path: str) -> list[tuple[str, str]]:
-    """Load a template dimension CSV (EventId, EventTemplate) preserving
-    file order. 29 rows — driver-side collect is the right call, exactly
-    as the reference does at ``prepare_data_batch.ipynb:291``."""
-    rows = (
-        spark.read.csv(path, header=True)
-        .select("EventId", "EventTemplate")
-        .collect()
-    )
-    return [(r["EventId"], r["EventTemplate"]) for r in rows]

@@ -1,6 +1,6 @@
 """Text-analysis building blocks for the training-data pipeline:
-tokenization, n-gram shingling, MinHash components, language-ID
-heuristic, quality metrics. All pure Catalyst expressions (JVM-side).
+tokenization, n-gram shingling, MinHash components, quality metrics.
+All pure Catalyst expressions (JVM-side).
 
 MinHash design (Broder 1997's single-base-hash form): each shingle is
 hashed ONCE — ``base = hex(md5(x))[:15] as int64`` (full 60 bits, the
@@ -127,42 +127,5 @@ def minhash_component(hash_col: Column, seed: int) -> Column:
         F.transform(
             hash_col,
             lambda h: (F.lit(a) * (h % MINHASH_P) + F.lit(b)) % MINHASH_P,
-        )
-    )
-
-
-def lang_id_heuristic(text: Column) -> Column:
-    """Cheap n-gram language-ID: scores a handful of high-frequency
-    function-word/character markers per language and takes the argmax.
-    (Real corpora: replace markers with trained n-gram profiles; the
-    operator shape — score columns + greatest/argmax — is the same.)"""
-    t = F.concat(F.lit(" "), F.lower(text), F.lit(" "))
-
-    def score(markers: list[str]) -> Column:
-        s = F.lit(0)
-        for m in markers:
-            s = s + F.when(t.contains(f" {m} "), 1).otherwise(0)
-        return s
-
-    scores = {
-        "en": score(["the", "and", "of", "is"]),
-        "de": score(["der", "und", "die", "ist"]),
-        "es": score(["el", "los", "es", "una"]),
-        "fr": score(["le", "les", "est", "une"]),
-    }
-    best = F.greatest(*scores.values())
-    expr = F.lit("und")  # undetermined
-    for lang, s in reversed(list(scores.items())):
-        expr = F.when((s == best) & (best > 0), F.lit(lang)).otherwise(expr)
-    return expr
-
-
-def token_count_bpe_ish(text: Column) -> Column:
-    """BPE-ish token estimate: word-piece regex (letters runs, digit runs,
-    punctuation singles), the standard pre-tokenizer shape."""
-    return F.size(
-        F.filter(
-            F.split(text, r"(?<=[^A-Za-z0-9])|(?=[^A-Za-z0-9])"),
-            lambda x: (x != "") & (x != " "),
         )
     )

@@ -835,15 +835,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") % IVF_CELLS).alias("seed_cell"),
         F.posexplode("embedding").alias("dim", "x"),
     ).select("vec_id", "seed_cell", "dim", F.col("x").cast("double").alias("x"))
-    cent = dims.groupBy(
-        F.col("seed_cell").alias("c"), "dim"
-    ).agg(F.avg("x").alias("cx"))
-    cent_arr = cent.groupBy(F.col("c").alias("cell")).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("dim", "cx"))),
-            lambda s: s.cx,
-        ).alias("cvec")
-    )
+    _, cent_arr = _centroids(dims, "seed_cell")
     ev = emb.select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
@@ -1039,17 +1031,8 @@ def ivf_topk_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") % IVF_CELLS).alias("seed_cell"),
         F.posexplode("embedding").alias("dim", "x"),
     ).select("vec_id", "seed_cell", "dim", F.col("x").cast("double").alias("x"))
-    cent = dims.groupBy(
-        F.col("seed_cell").alias("c"), "dim"
-    ).agg(F.avg("x").alias("cx"))
-    # in-row argmin assignment over the packed broadcast centroid
-    # table (r15 — see ivf_topk; identical arithmetic, no n×d×k rows)
-    cent_arr = cent.groupBy(F.col("c").alias("cell")).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("dim", "cx"))),
-            lambda s: s.cx,
-        ).alias("cvec")
-    )
+    # the long (c, dim, cx) means also rank the centroids for the probe
+    cent, cent_arr = _centroids(dims, "seed_cell")
     ev = emb.select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
@@ -1230,19 +1213,11 @@ def kmeans_step_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") % IVF_CELLS).alias("seed_cell"),
         F.posexplode("v").alias("dim", "x"),
     )
-    cent = dims.groupBy(F.col("seed_cell").alias("c"), "dim").agg(
-        F.avg("x").alias("cx")
-    )
+    cent, cent_arr = _centroids(dims, "seed_cell")
     # k rows → 1 row of k (cell, centroid-array) structs; the crossJoin
     # below is the allowlisted broadcast-1-row pattern (PLAN_AUDIT.md).
-    cent_arrays = cent.groupBy("c").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("dim", "cx"))),
-            lambda s: s["cx"],
-        ).alias("cvec")
-    )
-    cents_one = cent_arrays.agg(
-        F.array_sort(F.collect_list(F.struct("c", "cvec"))).alias("cents")
+    cents_one = cent_arr.agg(
+        F.array_sort(F.collect_list(F.struct("cell", "cvec"))).alias("cents")
     )
     # Narrow assignment: per-candidate squared L2 in fixed dim order
     # (deterministic float-add order), argmin via array_sort on
@@ -1260,7 +1235,7 @@ def kmeans_step_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_sort(
             F.transform(
                 "cents",
-                lambda s: F.struct(d2_to(s).alias("d2"), s["c"].alias("c")),
+                lambda s: F.struct(d2_to(s).alias("d2"), s["cell"].alias("c")),
             )
         )[0]["c"].alias("cell"),
     )
@@ -1488,12 +1463,11 @@ def semdedup_embedding_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs compute inside one partition after one shuffle on cell id.
 
     Round-8 rework of the two sf1 hot spots (VERDICT r7 task 3):
-    - assignment now uses the kmeans_step_shift shape — centroids
-      pivot to ONE broadcast row of k arrays and the cell argmin is a
-      pure column expression (array_sort on (d2, cell), ties to the
-      lowest cell id, fixed dim-order adds). The previous
+    - assignment no longer joins on dim: the previous
       join-on-dim/groupBy plan materialized N·d·k rows through a
-      shuffle — with k ∝ N that shuffle was the dominant sf1 cost;
+      shuffle — with k ∝ N that shuffle was the dominant sf1 cost.
+      Since r15 it is the shared Arrow/BLAS argmin (_assign_cells,
+      ties to the lowest cell id);
     - the within-cell pair step is capped by SEMDEDUP_SPLIT_WIDTH
       rank-contiguous sub-cells (see the constant's comment) so one
       skewed cell can no longer go quadratic.
@@ -1523,76 +1497,14 @@ def semdedup_embedding_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") % k).alias("seed_cell"),
         F.posexplode("v").alias("dim", "x"),
     )
-    cent = dims.groupBy(F.col("seed_cell").alias("c"), "dim").agg(
-        F.avg("x").alias("cx")
-    )
-    cent_arrays = cent.groupBy("c").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("dim", "cx"))),
-            lambda s: s["cx"],
-        ).alias("cvec")
-    )
-    # Assignment is an Arrow-batched BLAS matmul (r15): k grows with N
-    # here (semdedup_k), so the per-row interpreted argmin — k structs
-    # × a 64-dim fold each — was N·k·d scalar ops through the
-    # expression interpreter and drove the family's sf10 decade ratio
-    # to ~11 (the probe's worst). One B×d @ d×k matmul per Arrow batch
-    # does the identical argmin in vectorized BLAS: ‖v‖² is constant
-    # per row, so ranking by −2·v·C + ‖c‖² equals ranking by d2, and
-    # np.argmin's first-minimum rule over index-sorted cells IS the
-    # (d2, lowest cell) tie-break; the BLAS-vs-fold summation-order
-    # difference is the standing no-exact-ties argument (same class as
-    # the oracle's own sum order). The k×d centroid matrix rides a
-    # broadcast (dim-table-sized: k ≤ N/1250 → ~3 MB at sf100; at
-    # billions of rows the production path is hierarchical/ANN
-    # assignment, as the SemDeDup paper itself uses faiss k-means).
-    # EAGER by design: this collect() runs at plan-BUILD time (the k
-    # centroid rows, k ≤ N/1250 — a dim-table pull, not corpus data),
-    # because the BLAS kernel needs the matrix as a contiguous ndarray,
-    # not a per-row struct column. Callers that only want the plan
-    # (.explain, plan audit) pay one small job. The broadcast residue
-    # is bounded by bounded_broadcast: one live block for this site,
-    # the previous invocation's unpersisted (ADVICE r15).
-    cent_rows = sorted(cent_arrays.collect(), key=lambda r: r["c"])
-    C = np.array([r["cvec"] for r in cent_rows], dtype=np.float64)
-    cell_ids = np.array([r["c"] for r in cent_rows], dtype=np.int64)
-    bc = bounded_broadcast(spark, "semdedup_embedding_cells.centroids", (C, cell_ids))
-
-    def assign_arrow(batches):
-        # mapInArrow (r17, guide §4.2): the vector column is ONE
-        # contiguous Arrow buffer — np.frombuffer+reshape in, and the
-        # untouched v column passes back out zero-copy instead of
-        # round-tripping n per-row Python objects through pandas (the
-        # same boundary fix as vectorq._assign_cells).
-        import pyarrow as pa
-
-        Cm, ids = bc.value
-        cn = (Cm * Cm).sum(axis=1)  # ‖c‖² per centroid
-        for rb in batches:
-            n = rb.num_rows
-            if not n:
-                continue
-            vcol = rb.column(rb.schema.get_field_index("v"))
-            flat = vcol.flatten()
-            if len(flat) != n * Cm.shape[1]:
-                raise ValueError("ragged embedding batch")  # fail loud
-            V = np.asarray(flat, dtype=np.float64).reshape(
-                n, Cm.shape[1]
-            )
-            S = -2.0 * (V @ Cm.T) + cn  # rank-equal to d2 per row
-            idx = S.argmin(axis=1)  # first min = lowest cell id
-            yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column(rb.schema.get_field_index("vec_id")),
-                    vcol,
-                    pa.array(ids[idx]),
-                ],
-                ["vec_id", "v", "cell"],
-            )
-
-    assign = vecs.mapInArrow(
-        assign_arrow, "vec_id long, v array<double>, cell long"
-    )
+    _, cent_arr = _centroids(dims, "seed_cell")
+    # BLAS assignment, not an in-row argmin: k grows with N here
+    # (semdedup_k), so an interpreted fold is N·k·d scalar ops. The k×d
+    # centroid matrix rides a broadcast (dim-table-sized: k ≤ N/1250 →
+    # ~3 MB at sf100; at billions of rows the production path is
+    # hierarchical/ANN assignment, as the SemDeDup paper itself uses
+    # faiss k-means). v passes through for the pair kernel below.
+    assign = _assign_cells(vecs, cent_arr, extra="v")
 
     # Within-cell pair step as a per-CELL Arrow/BLAS kernel (r18, guide
     # §3/§4.2) replacing the row self-join: the old plan joined two
@@ -1621,7 +1533,6 @@ def semdedup_embedding_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     # contract as Java's Double.toString.
     w_split = SEMDEDUP_SPLIT_WIDTH
     thr_u = int(round(NEAR_DUP_THRESHOLD * 10_000))  # 3500
-    dim = C.shape[1]
 
     def cell_pairs_arrow(table):
         import pyarrow as pa
@@ -1633,10 +1544,12 @@ def semdedup_embedding_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
             vcol = vcol.combine_chunks()
         ids = np.asarray(ids_col, dtype=np.int64)
         n = len(ids)
-        flat = vcol.flatten()
-        if len(flat) != n * dim:
+        # every row of the cell must carry the same embedding width
+        lens = np.diff(np.asarray(vcol.offsets))
+        dim = int(lens[0])
+        if (lens != dim).any():
             raise ValueError("ragged embedding batch")  # fail loud
-        V = np.asarray(flat, dtype=np.float64).reshape(n, dim)
+        V = np.asarray(vcol.flatten(), dtype=np.float64).reshape(n, dim)
         order = np.argsort(ids)  # rank = vec_id order within the cell
         ids = ids[order]
         V = V[order]
@@ -1839,6 +1752,18 @@ IVF_CELL_MIN_BITS = 2
 IVF_CELL_MAX_BITS = 8   # 256 cells; production raises this cap
 
 
+def pq_d2(ad2u: Column) -> Column:
+    """Integer micro-unit ADC distance → ``pq_d2`` at 4 decimals, rounded
+    the oracle's way: DuckDB's ``round(x, 4)`` scales by 10⁴, rounds the
+    BINARY double half away from zero and scales back. Spark's
+    ``round(x, 4)`` instead rounds HALF_UP on x's shortest decimal
+    string, which differs on 2,039 of the ad2u values in [0, 3·10⁶)
+    (ad2u=150: x*10⁴ is just below 1.5, yet x prints as 1.5E-4, so
+    Spark gives 0.0002 and DuckDB 0.0001). At 0 decimals the two rules
+    agree — an exact .5 prints as .5 — so scaling first matches."""
+    return F.round(ad2u / 1_000_000.0 * 10_000, 0) / 10_000
+
+
 def ivf_cell_bits(n: int) -> int:
     return band_bits_ladder(
         n, IVF_CELL_MIN_BITS, IVF_CELL_MAX_BITS, IVF_CELL_TARGET
@@ -2030,8 +1955,27 @@ def _cb_arr(cb: DataFrame) -> DataFrame:
     )
 
 
+def _centroids(dims: DataFrame, key: str) -> tuple[DataFrame, DataFrame]:
+    """Per-cell mean vectors from a dim-exploded (``key``, dim, x) frame
+    — the ONE centroid builder behind the IVF, k-means, SemDeDup and
+    IVF-PQ sites. Returns the long means ``cent`` (c, dim, cx) and
+    ``cent_arr`` (cell, cvec): each cell's means packed into an array
+    in dim order, the shape :func:`_assign_cells` and the in-row fold
+    consumers read."""
+    cent = dims.groupBy(F.col(key).alias("c"), "dim").agg(
+        F.avg("x").alias("cx")
+    )
+    cent_arr = cent.groupBy(F.col("c").alias("cell")).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("dim", "cx"))),
+            lambda s: s.cx,
+        ).alias("cvec")
+    )
+    return cent, cent_arr
+
+
 def _assign_cells(
-    ev: DataFrame, cent_arr: DataFrame, residual: bool = False
+    ev: DataFrame, cent_arr: DataFrame, extra: str | None = None
 ) -> DataFrame:
     """Nearest-centroid assignment as an Arrow-batched BLAS matmul
     (r16). The r15 in-row ``array_min(transform(...))`` fold kept the
@@ -2043,7 +1987,9 @@ def _assign_cells(
     matmul per Arrow batch does the identical argmin in vectorized
     BLAS — the same rework that fixed semdedup in r15.
 
-    ``residual=True`` (r17 optimization) additionally emits
+    The output is (vec_id, cell) plus one optional ``extra`` column:
+    ``"v"`` passes the input vector through zero-copy (semdedup's pair
+    kernel reads it), ``"rvec"`` (r17 optimization) emits
     ``rvec = v − C[cell]`` from the SAME batch pass — the residual the
     PQ encode path needs. Computing it here removes the two
     corpus-wide ``ev ⋈ assign`` joins (plus their broadcast-centroid
@@ -2066,8 +2012,6 @@ def _assign_cells(
     plain-IVF seed cells, string for the sign-orthant ivfpq cells)."""
     import numpy as np
 
-    from ..session import bounded_broadcast
-
     cell_dt = cent_arr.schema["cell"].dataType.simpleString()
     rows = sorted(cent_arr.collect(), key=lambda r: r["cell"])
     C = np.array([r["cvec"] for r in rows], dtype=np.float64)
@@ -2078,6 +2022,7 @@ def _assign_cells(
     bc = bounded_broadcast(
         ev.sparkSession, "vectorq._assign_cells.centroids", (C, ids)
     )
+    names = ["vec_id", "cell"] + ([extra] if extra else [])
 
     def assign_arrow(batches):
         # mapInArrow, not mapInPandas (r17, guide §4.2): the vector
@@ -2108,8 +2053,9 @@ def _assign_cells(
                 rb.column(rb.schema.get_field_index("vec_id")),
                 pa.array(ida[amin]),
             ]
-            names = ["vec_id", "cell"]
-            if residual:
+            if extra == "v":
+                cols.append(vcol)
+            elif extra == "rvec":
                 R = V - Cm[amin]  # same x−c as the zip_with it replaced
                 if n * Cm.shape[1] >= 2**31:  # ADVICE r17: int32
                     # ListArray offsets would wrap silently if the
@@ -2126,12 +2072,11 @@ def _assign_cells(
                         pa.array(R.ravel(), type=pa.float64()),
                     )
                 )
-                names.append("rvec")
             yield pa.RecordBatch.from_arrays(cols, names)
 
     schema = f"vec_id long, cell {cell_dt}"
-    if residual:
-        schema += ", rvec array<double>"
+    if extra:
+        schema += f", {extra} array<double>"
     return ev.mapInArrow(assign_arrow, schema)
 
 
@@ -2153,7 +2098,7 @@ def _ivfpq_encode(
 
     r17 optimization (guide §2.3/§2.4): the residual now comes out of
     the SAME Arrow/BLAS pass as the cell assignment
-    (_assign_cells(residual=True)) instead of an ``ev ⋈ assign`` join
+    (_assign_cells(extra="rvec")) instead of an ``ev ⋈ assign`` join
     followed by a broadcast-centroid zip_with — the joins that, at
     100 TB, shuffled the raw vectors by vec_id for no reason the
     batch pass couldn't serve. Encoding N vectors is now genuinely
@@ -2164,7 +2109,7 @@ def _ivfpq_encode(
     the r15 rewrite that removed the old n×k and n×256 join+shuffle
     stages)."""
     if assign is None:
-        assign = _assign_cells(ev, cent_arr, residual=True)
+        assign = _assign_cells(ev, cent_arr, extra="rvec")
     rv = F.col("rvec")
     rsv = assign.select(
         "vec_id",
@@ -2235,17 +2180,7 @@ def _ivfpq_index(
     # ranking, query residuals) now broadcasts a driver-local table
     # with zero recompute — at deployment the coarse quantizer is
     # trained once and persisted, which this mirrors.
-    cent_arr_plan = (
-        dims.groupBy("cell", "dim")
-        .agg(F.avg("x").alias("cx"))
-        .groupBy("cell")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "cx"))),
-                lambda s: s.cx,
-            ).alias("cvec")
-        )
-    )
+    _, cent_arr_plan = _centroids(dims, "cell")
     cent_rows = cent_arr_plan.collect()
     cent_arr = emb.sparkSession.createDataFrame(
         cent_rows, cent_arr_plan.schema
@@ -2268,7 +2203,7 @@ def _ivfpq_index(
 
     assign = bounded_persist(
         "vectorq._ivfpq_index.assign",
-        _assign_cells(ev, cent_arr, residual=True),
+        _assign_cells(ev, cent_arr, extra="rvec"),
     )
     rv = F.col("rvec")
     rsv = assign.select(
@@ -2402,7 +2337,7 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "label",
-            F.round(F.col("ad2u") / 1_000_000.0, 4).alias("pq_d2"),
+            pq_d2(F.col("ad2u")).alias("pq_d2"),
             cosine.alias("cosine"),
         )
         .orderBy(F.desc("cosine"), "vec_id")
@@ -2649,7 +2584,7 @@ def ivfpq_knn_join(
             "query_id",
             "vec_id",
             "label",
-            F.round(F.col("ad2u") / 1_000_000.0, 4).alias("pq_d2"),
+            pq_d2(F.col("ad2u")).alias("pq_d2"),
             cosine.alias("cosine"),
         )
         .withColumn("rank", F.row_number().over(wr))

@@ -24,7 +24,6 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.logparse import parse_log_lines
 from ..functions.templates import event_id_expr
 from ..schemas import SESSION_MESSAGE
 
@@ -36,18 +35,6 @@ def decode_messages(raw: DataFrame, value_col: str = "value") -> DataFrame:
     return raw.select(
         F.from_json(F.col(value_col).cast("string"), SESSION_MESSAGE).alias("m")
     ).select("m.*")
-
-
-def parse_message_lines(messages: DataFrame) -> DataFrame:
-    """Explode each session message's log_full into parsed lines —
-    the shared batch parser over the stream (Skew-3 fixed: the parser
-    accepts both timestamp formats), carrying the message key through."""
-    lines = messages.select(
-        F.col("block_id").alias("message_block_id"),
-        "start_ts",
-        F.explode(F.split("log_full", "\n")).alias("value"),
-    )
-    return parse_log_lines(lines, "value")
 
 
 def dedup_messages(

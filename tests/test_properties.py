@@ -20,7 +20,7 @@ docstrings claim:
 from __future__ import annotations
 
 import pandas as pd
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 
@@ -374,16 +374,23 @@ def test_minhash_signature_invariants(spark, texts, rng):
         min_size=1,
         max_size=30,
     ).filter(lambda es: any(a != b for a, b in es)),
+    st.sampled_from([1, 2, 5]),
 )
+# a mid-budget window always runs, whatever hypothesis draws
+@example(edges=[(0, 1), (1, 2), (2, 3)], checkpoint_every=2)
 @settings(max_examples=8, deadline=None)
-def test_pagerank_early_exit_matches_python_replica(spark, edges):
+def test_pagerank_early_exit_matches_python_replica(
+    spark, edges, checkpoint_every
+):
     """The round-8 convergence early-exit may stop the integer
     PageRank loop ONLY at states a full-budget run would also pass
     through: (1) the Spark loop's result after `rounds` rounds equals a
     pure-Python replica of the same integer update run for `rounds`
     rounds; (2) when the loop exits before its budget in exact mode,
     the replica's NEXT round reproduces the same ranks (a true
-    fixpoint, so the unrolled-budget result is identical)."""
+    fixpoint, so the unrolled-budget result is identical). Both hold for
+    every checkpoint window: one round per window (1), mid-budget
+    windows of 2 rounds (2), and one window spanning the budget (5)."""
     from pyspark.sql import functions as F
 
     from log_analysis_bigdata_spark.queries.graphq import (
@@ -413,7 +420,9 @@ def test_pagerank_early_exit_matches_python_replica(spark, edges):
     )
     contrib = df.join(deg.withColumnRenamed("node", "src"), "src")
     budget = 5
-    ranks, rounds = _pr_loop(contrib, ranks0, max_iter=budget)
+    ranks, rounds = _pr_loop(
+        contrib, ranks0, max_iter=budget, checkpoint_every=checkpoint_every
+    )
     got = {r["node"]: r["rank"] for r in ranks.collect()}
 
     outdeg: dict[int, int] = {}

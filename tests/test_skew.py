@@ -166,6 +166,51 @@ def test_semdedup_subcell_caps_adversarial_cell(spark, tmp_path):
     assert not problems, "; ".join(problems)
 
 
+def test_semdedup_zero_vectors_match_oracle(spark, tmp_path):
+    """Zero-norm embeddings make a pair's cosine 0/0: NaN in the pair
+    kernel, which never qualifies, and NULL in DuckDB, where
+    ``NULL >= threshold`` filters the row. Zero vectors therefore must
+    contribute no dup pair on either engine and the cell stats must
+    match the oracle exactly. The corpus mixes random vectors, a block
+    of zero vectors (all tied to the same nearest centroid) and six
+    identical copies of one vector (15 planted dup pairs)."""
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from log_analysis_bigdata_spark.queries import all_queries
+    from tests.oracle_harness import strict_compare_frames
+
+    rng = np.random.RandomState(99)
+    vecs = rng.uniform(-1.0, 1.0, (200, 64)).astype(np.float32).tolist()
+    vecs += [[0.0] * 64] * 12 + [vecs[1]] * 5
+    n = len(vecs)
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": np.arange(n, dtype=np.int64),
+                "embedding": pa.array(vecs, type=pa.list_(pa.float32())),
+                "label": np.zeros(n, dtype=np.int32),
+            }
+        ),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    qd = all_queries()["semdedup_embedding_cells"]
+    spdf = qd.spark(spark, str(tmp_path)).toPandas()
+    assert int(spdf["n_members"].sum()) == n
+    assert int(spdf["n_dup_pairs"].sum()) >= 15  # the planted copies
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/embeddings.parquet')"
+    )
+    dpdf = con.execute(qd.oracle).fetchdf()
+    problems, _ = strict_compare_frames(spdf, dpdf)
+    assert not problems, "; ".join(problems)
+
+
 def test_heavy_hitters_sketch_arm_exact_on_skew(spark, zipf_dir, monkeypatch):
     """The r9 sf1 sweep showed the space-saving arm losing recall on
     near-uniform keys; the fix gates it behind a cardinality check AND
