@@ -35,8 +35,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 
+# Loop working-set rows per shuffle partition (loop_parallelism).
+ROWS_PER_PARTITION = 200_000
+
+
 @contextmanager
-def loop_parallelism(spark, n_rows: int, rows_per_partition: int = 200_000):
+def loop_parallelism(spark, n_rows: int):
     """Scope spark.sql.shuffle.partitions to an iterative loop, sized to
     the loop's OWN working set (edge/rank frames) instead of the
     session's corpus-scale default: a 4k-edge graph at 32 shuffle
@@ -57,7 +61,7 @@ def loop_parallelism(spark, n_rows: int, rows_per_partition: int = 200_000):
         # loop still runs correctly at the session default.
         yield prev
         return
-    parts = max(1, min(int(prev), n_rows // rows_per_partition + 1))
+    parts = max(1, min(int(prev), n_rows // ROWS_PER_PARTITION + 1))
     try:
         spark.conf.set("spark.sql.shuffle.partitions", str(parts))
         yield prev
@@ -80,24 +84,27 @@ def guard_parallelism(spark, prev: str) -> None:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+# Round budget of the distributed propagation loop. 40, not 25: the
+# sf10 image rep graph (52k nodes, chain-heavy near-signature
+# structure) needed >25 propagation rounds — path halving compresses
+# label TREES, but a min label still walks long chains roughly linearly
+# until the halved paths overlap, so the round count tracks the longest
+# chain, not log(diameter), on chain-dominated graphs (round-14 probe
+# finding). The stats re-base (STATS_RESET_EVERY) keeps deep runs
+# plannable.
+MAX_ROUNDS = 40
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    # 40, not 25: the sf10 image rep graph (52k nodes, chain-heavy
-    # near-signature structure) needed >25 propagation rounds — path
-    # halving compresses label TREES, but a min label still walks long
-    # chains roughly linearly until the halved paths overlap, so the
-    # round count tracks the longest chain, not log(diameter), on
-    # chain-dominated graphs (round-14 probe finding). The stats
-    # re-base (STATS_RESET_EVERY) keeps deep runs plannable.
-    max_iter: int = 40,
     distinct_pairs: bool = False,
 ) -> DataFrame:
     """(node, component) where component = min node id reachable.
 
     ``edges`` is an undirected pair list; isolated self-loops are fine.
-    Raises if the fixpoint is not reached within ``max_iter`` rounds
+    Raises if the fixpoint is not reached within ``MAX_ROUNDS`` rounds
     (diameter larger than expected) rather than returning wrong labels.
 
     ``distinct_pairs=True`` asserts the input is already a distinct
@@ -132,10 +139,12 @@ def connected_components(
     # union-find proceeds on it directly. The old sequence paid three
     # barrier jobs for the same decision (eager localCheckpoint, then
     # count(), then toPandas()), ~2 jobs of pure fixed latency on every
-    # dedup/near-dup pipeline that ends here. The persist makes the
-    # upstream work (often the whole minhash pipeline) reusable by the
-    # distributed path when the probe overflows; a bounded cap+1 slice
+    # dedup/near-dup pipeline that ends here. A bounded cap+1 slice
     # (<= ~8 MB through the driver) is the only thing ever collected.
+    # The persist caches only the partitions the probe computes: on an
+    # overflow the limit may stop after a prefix of the partitions, so
+    # the cache can hold part of the upstream work (often the whole
+    # minhash pipeline), not all of it.
     sym = sym.persist()
     head = sym.limit(LOCAL_SOLVE_MAX_EDGES + 1).toPandas()
     if len(head) <= LOCAL_SOLVE_MAX_EDGES:
@@ -146,8 +155,9 @@ def connected_components(
     # big graph: localCheckpoint (eager) rather than persist for the
     # LOOP input — it truncates lineage, so round N's plan doesn't
     # re-derive the whole upstream query and doesn't grow with the
-    # iteration count; the probe's cache makes the re-materialization a
-    # cache read, not a recompute.
+    # iteration count. Partitions the probe cached are read from the
+    # cache; partitions it never computed are recomputed from upstream
+    # here.
     ckpt = sym.localCheckpoint(eager=True)
     sym.unpersist(blocking=False)
     sym = ckpt
@@ -160,7 +170,7 @@ def connected_components(
     )
     # see loop_parallelism for why rounds shuffle at edge-set scale
     with loop_parallelism(edges.sparkSession, n_edges) as session_default:
-        labels = _propagate(sym, labels, max_iter, session_default)
+        labels = _propagate(sym, labels, session_default)
     return labels
 
 
@@ -301,7 +311,6 @@ def _rebase_stats(df: DataFrame, round_no: int) -> tuple[DataFrame, str]:
 def _propagate(
     sym: DataFrame,
     labels: DataFrame,
-    max_iter: int,
     session_default: str | None = None,
 ) -> DataFrame:
     from pyspark.sql import Observation
@@ -314,7 +323,7 @@ def _propagate(
     # labels frame has been eagerly localCheckpoint-ed in a LATER round,
     # so nothing reads the old files anymore (ADVICE r14 leak fix)
     live_rebase_path: str | None = None
-    for _round in range(max_iter):
+    for _round in range(MAX_ROUNDS):
         guard_parallelism(spark, session_default)
         # candidate label for each node: min over its own and neighbors'
         neighbor_min = (
@@ -363,7 +372,7 @@ def _propagate(
             .localCheckpoint(eager=True)
         )
         # SUM over zero rows is NULL: coalesce so an empty labels frame
-        # reads as converged instead of spinning to max_iter (ADVICE r7;
+        # reads as converged instead of spinning to MAX_ROUNDS (ADVICE r7;
         # reachable only if the local-solve edge gate is tuned away).
         changed = obs.get["changed"] or 0
         labels = new_labels.select("node", "component")
@@ -375,7 +384,7 @@ def _propagate(
                 _delete_dir(spark, live_rebase_path)
             live_rebase_path = new_path
     else:
-        raise RuntimeError(f"no fixpoint after {max_iter} rounds")
+        raise RuntimeError(f"no fixpoint after {MAX_ROUNDS} rounds")
     if live_rebase_path is not None:
         # the break round eagerly localCheckpoint-ed AFTER the last
         # rebase's read jobs completed, so the dir is no longer read

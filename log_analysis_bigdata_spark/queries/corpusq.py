@@ -1216,8 +1216,11 @@ def corpus_to_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and its own replay of the drops/contam joins — the anti-joins ran
     # 4x/3x across the old stage frames, now once). Anti-join ≡ left
     # join + IS NULL here because drops (one row per clustered node)
-    # and contam (distinct) are unique by doc_id. Integer counts/sums —
-    # values identical by construction; the oracle is unchanged.
+    # and contam (distinct) are unique by doc_id; connected_components'
+    # one-row-per-node output is pinned on both solve paths by
+    # tests/test_properties.py::test_components_local_equals_distributed.
+    # Integer counts/sums — values identical by construction; the
+    # oracle is unchanged.
     h = F.expr(
         "locate(substr(md5(CAST(doc_id AS STRING)), 1, 1),"
         " '0123456789abcdef') - 1"

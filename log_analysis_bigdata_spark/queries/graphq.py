@@ -11,21 +11,18 @@ bit-identical in Spark and DuckDB. The damping update is
     r'(v) = JUMP + Σ_{u→v} floor(DAMP_NUM * r(u) / (DAMP_DEN * outdeg(u)))
 
 with JUMP = 150_000, DAMP_NUM/DAMP_DEN = 850/1000 and r0 = 1_000_000 —
-the classic 0.15/0.85 PageRank scaled by 1e6. A fixed iteration budget
-(unrolled in the SQL oracle) bounds the loop; the loop ALSO exits
-early at an exact integer fixpoint (round 8): the update is a
-deterministic function of the rank frame, so once r_i == r_{i-1}
-every later round reproduces the same frame bit-for-bit — stopping
-there cannot diverge from the unrolled oracle, unlike a float
-epsilon threshold, which would. The change count rides the same job
-that materializes each round's checkpoint (Observation fires on
-eager localCheckpoint), so convergence detection adds zero extra
-jobs — the pattern operators/components.py uses.
+the classic 0.15/0.85 PageRank scaled by 1e6. The loop runs the fixed
+PR_ITERS-round budget that the SQL oracle unrolls, with no early exit.
+The round-8 fixpoint exit and the r18 checkpoint windows are gone:
+the three rounds nest into one lazy plan that runs as one job, so an
+exit test could save no job, and only tests ever reached it. The
+one fixpoint loop left is operators/components.py's label
+propagation.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
@@ -84,12 +81,10 @@ def _pr_step_sql(prev: str, out: str) -> str:
 )
 def pagerank_supplier_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer PageRank over the customer↔supplier order graph, 3
-    rounds, top-20 nodes. The driver loop is the standard Spark
-    iterative discipline (operators/components.py): each round is one
-    edges⋈ranks join + a groupBy(dst) sum, the new rank frame is
-    localCheckpoint-ed (eager) so round N's plan never re-derives rounds
-    1..N-1, and the edge/degree frames are materialized ONCE before the
-    loop. Integer micro-unit arithmetic makes every round's output
+    rounds, top-20 nodes. Each round is one edges⋈ranks join + a
+    groupBy(dst) sum; the edge/degree frames are materialized ONCE
+    before the loop, and the three rounds run as one checkpointed job
+    (_pr_loop). Integer micro-unit arithmetic makes every round's output
     bit-identical to the unrolled-CTE oracle (module docstring).
 
     Scale: per round, one shuffle of the edge list keyed on src (join)
@@ -132,27 +127,17 @@ def pagerank_supplier_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deg's eager checkpoint is the ONE pre-loop barrier (r17): it
     # materializes the cs cache as a side effect, and an Observation on
     # the same job carries Σoutdeg (= 2·|undirected pairs|, the
-    # loop_parallelism sizing input) and the node count (the loop's
-    # row-count guard baseline) — replacing the separate cs.count() and
-    # ranks.count() jobs the old plan paid (guide §1.2: fewer barrier
-    # jobs, same answers).
-    from pyspark.sql import Observation
-
+    # loop_parallelism sizing input) — no separate cs.count() job
+    # (guide §1.2: fewer barrier jobs, same answers).
     deg_obs = Observation()
     deg = (
         edges.groupBy("src")
         .agg(F.count(F.lit(1)).alias("outdeg"))
         .withColumnRenamed("src", "node")
-        .observe(
-            deg_obs,
-            F.sum("outdeg").alias("deg_sum"),
-            F.count(F.lit(1)).alias("n_nodes"),
-        )
+        .observe(deg_obs, F.sum("outdeg").alias("deg_sum"))
         .localCheckpoint(eager=True)  # node-sized: cheap, truncates
     )
-    got = deg_obs.get
-    two_e = int(got["deg_sum"] or 0)
-    n_nodes = int(got["n_nodes"] or 0)
+    two_e = int(deg_obs.get["deg_sum"] or 0)
     # narrow derivation from the checkpointed deg — its own checkpoint
     # was a pure barrier job (r17)
     ranks = deg.select(
@@ -182,17 +167,9 @@ def pagerank_supplier_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         # per round's plan), so the standalone count was a pure barrier
         contrib_src = pre.repartition(nparts, "src").persist()
         try:
-            # checkpoint_every=PR_ITERS (r18): the whole 3-round budget
-            # nests into ONE lazy plan and materializes as one job —
-            # loop barrier jobs 3 → 1 (guide §1.2); exit/latch
-            # semantics unchanged, see _pr_loop
-            ranks, _rounds = _pr_loop(
-                contrib_src,
-                ranks,
-                session_default,
-                initial_n=n_nodes,
-                checkpoint_every=PR_ITERS,
-            )
+            # the whole 3-round budget is ONE lazy plan materialized as
+            # one job (loop barrier jobs 3 → 1, guide §1.2)
+            ranks = _pr_loop(contrib_src, ranks, session_default)
         finally:
             contrib_src.unpersist(blocking=False)
             cs.unpersist(blocking=False)  # contrib_src is materialized
@@ -203,86 +180,33 @@ def _pr_loop(
     contrib_src: DataFrame,
     ranks: DataFrame,
     session_default: str | None = None,
-    max_iter: int = PR_ITERS,
-    stop_shift: int = 0,
-    initial_n: int | None = None,
-    checkpoint_every: int = 1,
-) -> tuple[DataFrame, int]:
-    """Run up to ``max_iter`` damped-update rounds; returns the final
-    rank frame and the number of rounds actually executed.
-
-    Early exit, two modes:
-    - ``stop_shift=0`` (default, what the registered query uses): exit
-      ONLY at an exact integer fixpoint (no rank changed) — semantics-
-      preserving against an unrolled max_iter-round oracle, see module
-      docstring.
-    - ``stop_shift>0``: ALSO exit once the round's total absolute rank
-      movement Σ|Δ| (micro-units) drops to <= stop_shift — the
-      practical convergence stop for large iteration budgets, where
-      integer ranks typically cycle in the last few units and never
-      reach exact equality. Callers opting in accept ranks from the
-      first sub-threshold round instead of the full budget.
-
-    ``checkpoint_every=k`` (r18, guide §1.2 — fewer barrier jobs)
-    materializes one eager localCheckpoint per WINDOW of k rounds
-    instead of per round: the k join+agg rounds nest into one lazy plan
-    and execute as ONE job (one barrier, one scheduler round-trip). The
-    fixpoint/shrink tests move to the window's LAST round, which is
-    exit-equivalent: a fixpoint at any round j inside the window makes
-    every later round reproduce the same frame bit-for-bit (module
-    docstring), so "last round unchanged" fires iff some round in the
-    window reached the fixpoint, and the returned frame is that same
-    fixpoint frame. The node count is monotonically non-increasing
-    across rounds (a step's nodes are the dsts reachable from the
-    current frame), so comparing the window-end count to the window-
-    start baseline detects any mid-window shrink — the latch semantics
-    are unchanged. ``stop_shift>0`` forces k=1: its exit is a
-    threshold on ONE round's movement, not a window's.
-    (Plan note: only the window's last round references the previous
-    frame twice — the mid-window rounds reference it once — so the
-    nested plan grows linearly in k, and the duplicated subtree's
-    exchanges dedupe through ReuseExchange/AQE stage reuse.)
-
-    Both tests ride the checkpoint materialization via Observation:
-    zero additional jobs per window.
+) -> DataFrame:
+    """Apply ``PR_ITERS`` damped-update rounds to ``ranks`` and return
+    the new rank frame. The rounds nest into one lazy plan (each round
+    references the previous frame once), and one eager localCheckpoint
+    runs it as one job. The checkpoint also materializes the ranks
+    before the caller unpersists the frames that plan reads.
 
     PRECONDITION: every ranked node must appear as a ``dst`` in
     ``contrib_src`` (true for bidirectional edge sets, as the
-    registered query builds). A node with no in-edges silently leaves
-    the frame after one round — the row-count guard below (ADVICE r8,
-    hardened by code-review r9) seeds the baseline from the INITIAL
-    ranks frame (one extra count; round-1 shrinks are visible) and
-    LATCHES on any shrink, so reuse on a non-bidirectional graph can
-    burn the full iteration budget but can never report a false
-    fixpoint over a shrunken frame."""
-    from pyspark.sql import Observation
-
+    registered query builds). A node with no in-edges leaves the frame
+    after one round, exactly as the oracle's ``GROUP BY e.dst`` drops
+    it."""
     from ..operators.components import guard_parallelism
 
     spark = contrib_src.sparkSession
     if session_default is None:
         session_default = spark.conf.get("spark.sql.shuffle.partitions")
-    if stop_shift > 0:
-        checkpoint_every = 1  # per-round threshold needs per-round frames
-    checkpoint_every = max(1, checkpoint_every)
-    rounds = 0
-    # baseline row count for the shrink guard — a node lost in round 1
-    # must register as a shrink too. The registered query passes it in
-    # (it rides deg's Observation — r17: one fewer barrier job); other
-    # callers pay one count of their own frame.
-    prev_n: int = ranks.count() if initial_n is None else initial_n
-    ever_shrank = False
-
-    def one_round(cur: DataFrame) -> DataFrame:
+    for _ in range(PR_ITERS):
         guard_parallelism(spark, session_default)
-        return (
+        ranks = (
             contrib_src.join(
                 # shuffle_hash with ranks as build side: the persisted
                 # edge frame's hashpartitioning(src) satisfies the join
                 # requirement (no re-exchange; a broadcast would ship
                 # the node-sized frame to every executor each round and
                 # a sort-merge would re-sort the cached side per round)
-                cur.withColumnRenamed("node", "src").hint(
+                ranks.withColumnRenamed("node", "src").hint(
                     "shuffle_hash"
                 ),
                 "src",
@@ -307,72 +231,4 @@ def _pr_loop(
                 .alias("rank")
             )
         )
-
-    while rounds < max_iter:
-        window = min(checkpoint_every, max_iter - rounds)
-        final_window = rounds + window >= max_iter
-        cur = ranks
-        if final_window and window > 1 and not ever_shrank:
-            # Last window of the budget with nothing left to decide:
-            # no exit test can shorten the run and no fixpoint claim
-            # follows, so skip the old-join + Observation entirely —
-            # the window is a straight-line nest of `window` rounds
-            # (each referencing the previous frame ONCE — no duplicated
-            # subtree to re-execute) materialized by one checkpoint.
-            for _ in range(window):
-                cur = one_round(cur)
-            ranks = cur.localCheckpoint(eager=True)
-            rounds += window
-            break
-        for _ in range(window - 1):  # mid-window rounds: lazy, no obs
-            cur = one_round(cur)
-        step = one_round(cur)
-        # bidirectional edges → every node has in- and out-edges, so
-        # step's node set equals the previous frame's and the left join
-        # below never invents or drops nodes; `old` is null-free after
-        # round 0 too, the coalesce is belt-and-braces for an empty
-        # frame
-        obs = Observation()
-        nxt = (
-            step.join(
-                cur.select(
-                    "node", F.col("rank").alias("old")
-                ),
-                "node",
-                "left",
-            )
-            .observe(
-                obs,
-                F.sum(
-                    (
-                        F.col("rank")
-                        != F.coalesce(F.col("old"), F.lit(-1))
-                    ).cast("long")
-                ).alias("changed"),
-                F.sum(
-                    F.abs(
-                        F.col("rank")
-                        - F.coalesce(F.col("old"), F.lit(0))
-                    )
-                ).alias("shift"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .select("node", "rank")
-            .localCheckpoint(eager=True)
-        )
-        ranks = nxt
-        rounds += window
-        got = obs.get
-        n = got["n"] or 0
-        if n != prev_n:
-            ever_shrank = True  # LATCHED: a rank vanished without
-            # counting as "changed" — no later round may claim a
-            # fixpoint over the shrunken frame
-        prev_n = n
-        if ever_shrank:
-            continue
-        if (got["changed"] or 0) == 0:
-            break
-        if stop_shift > 0 and (got["shift"] or 0) <= stop_shift:
-            break
-    return ranks, rounds
+    return ranks.localCheckpoint(eager=True)

@@ -2126,8 +2126,8 @@ def simhash_near_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     → a few hundred rep pairs; 7.2 s → ~2 s. Banded generation stays
     never-all-pairs; the verify runs before the pair distinct; the
     components operator picks its local-vs-distributed path by edge
-    count (operators/components.py); max_iter raises rather than
-    mislabeling.
+    count (operators/components.py); running out of MAX_ROUNDS raises
+    rather than mislabeling.
     """
     corpus = _dup_corpus_spark(spark, sf_dir)
     sig = _near_sig_spark(corpus).localCheckpoint(eager=True)

@@ -178,6 +178,81 @@ def test_connected_components_chain_and_islands(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20}
 
 
+def test_connected_components_raises_without_fixpoint(spark, monkeypatch):
+    """The distributed loop fails loudly when its round budget runs out
+    before the labels settle, rather than returning wrong labels."""
+    import pytest
+
+    from log_analysis_bigdata_spark.operators import components as C
+
+    monkeypatch.setattr(C, "MAX_ROUNDS", 1)
+    monkeypatch.setattr(C, "LOCAL_SOLVE_MAX_EDGES", -1)  # distributed
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(5)], "src bigint, dst bigint"
+    )
+    with pytest.raises(RuntimeError, match="no fixpoint after 1 rounds"):
+        C.connected_components(chain)
+
+
+def test_loop_parallelism_narrows_and_restores(spark):
+    """loop_parallelism narrows spark.sql.shuffle.partitions to
+    min(default, n_rows // ROWS_PER_PARTITION + 1) inside the block and
+    restores the session default on normal exit and on an exception."""
+    import pytest
+
+    from log_analysis_bigdata_spark.operators.components import (
+        ROWS_PER_PARTITION,
+        loop_parallelism,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    default = spark.conf.get(key)
+    assert int(default) > 3
+    with loop_parallelism(spark, 2 * ROWS_PER_PARTITION + 5) as prev:
+        assert prev == default
+        assert spark.conf.get(key) == "3"
+    assert spark.conf.get(key) == default
+    with loop_parallelism(spark, 10**6 * ROWS_PER_PARTITION):
+        assert spark.conf.get(key) == default  # never above the default
+    with pytest.raises(ValueError):
+        with loop_parallelism(spark, 0):
+            assert spark.conf.get(key) == "1"
+            raise ValueError("loop failed")
+    assert spark.conf.get(key) == default
+
+
+def test_loop_parallelism_yields_to_active_stream(spark, tmp_path):
+    """With a streaming query active, loop_parallelism leaves the conf
+    alone, and guard_parallelism restores the default that a stream
+    started inside a narrowed loop would otherwise compile with."""
+    from log_analysis_bigdata_spark.operators.components import (
+        guard_parallelism,
+        loop_parallelism,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    default = spark.conf.get(key)
+    with loop_parallelism(spark, 0) as prev:
+        assert spark.conf.get(key) == "1"
+        q = (
+            spark.readStream.format("rate")
+            .option("rowsPerSecond", 1)
+            .load()
+            .writeStream.format("noop")
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .start()
+        )
+        try:
+            guard_parallelism(spark, prev)
+            assert spark.conf.get(key) == default
+            with loop_parallelism(spark, 0) as inner:
+                assert inner == default
+                assert spark.conf.get(key) == default
+        finally:
+            q.stop()
+    assert spark.conf.get(key) == default
+
+
 def test_observed_ingest_health_batch(spark):
     """Dataset.observe: health metrics ride the SAME job as the query —
     no second scan — and report exact counts. Runs in an isolated
@@ -584,7 +659,7 @@ def test_propagate_stats_rebase_bounds_plan_statistics(spark):
         .withColumn("component", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    out = C._propagate(sym, labels, max_iter=30)
+    out = C._propagate(sym, labels)
     rows = out.collect()
     assert len(rows) == n
     assert all(r["component"] == 0 for r in rows)
@@ -666,7 +741,7 @@ def test_rebase_dirs_are_deleted_after_use(spark, tmp_path, monkeypatch):
         .withColumn("component", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    out = C._propagate(sym, labels, max_iter=30)
+    out = C._propagate(sym, labels)
     rows = out.collect()
     assert len(rows) == n and all(r["component"] == 0 for r in rows)
     leaked = list(tmp_path.glob("cc_stats_rebase_*"))

@@ -292,24 +292,29 @@ def test_components_local_equals_distributed(spark, edges):
     """The size-gated driver union-find and the distributed
     label-propagation loop must produce IDENTICAL (node, component)
     labelings on arbitrary graphs — the strategy switch may never
-    change results."""
+    change results. Both paths emit ONE row per node: the
+    corpus_to_training_set left-join-as-anti-join rewrite
+    (queries/corpusq.py) relies on that uniqueness."""
     import log_analysis_bigdata_spark.operators.components as C
 
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    local = {
+    local = [
         (r["node"], r["component"])
         for r in C.connected_components(df).collect()
-    }
+    ]
     orig = C.LOCAL_SOLVE_MAX_EDGES
     C.LOCAL_SOLVE_MAX_EDGES = -1  # force the distributed loop
     try:
-        dist = {
+        dist = [
             (r["node"], r["component"])
             for r in C.connected_components(df).collect()
-        }
+        ]
     finally:
         C.LOCAL_SOLVE_MAX_EDGES = orig
-    assert local == dist
+    for rows in (local, dist):
+        nodes = [n for n, _ in rows]
+        assert len(nodes) == len(set(nodes)), "a node repeats"
+    assert set(local) == set(dist)
 
 
 @given(
@@ -373,30 +378,21 @@ def test_minhash_signature_invariants(spark, texts, rng):
         ),
         min_size=1,
         max_size=30,
-    ).filter(lambda es: any(a != b for a, b in es)),
-    st.sampled_from([1, 2, 5]),
+    ).filter(lambda es: any(a != b for a, b in es))
 )
-# a mid-budget window always runs, whatever hypothesis draws
-@example(edges=[(0, 1), (1, 2), (2, 3)], checkpoint_every=2)
+@example(edges=[(0, 1), (1, 2), (2, 3)])
 @settings(max_examples=8, deadline=None)
-def test_pagerank_early_exit_matches_python_replica(
-    spark, edges, checkpoint_every
-):
-    """The round-8 convergence early-exit may stop the integer
-    PageRank loop ONLY at states a full-budget run would also pass
-    through: (1) the Spark loop's result after `rounds` rounds equals a
-    pure-Python replica of the same integer update run for `rounds`
-    rounds; (2) when the loop exits before its budget in exact mode,
-    the replica's NEXT round reproduces the same ranks (a true
-    fixpoint, so the unrolled-budget result is identical). Both hold for
-    every checkpoint window: one round per window (1), mid-budget
-    windows of 2 rounds (2), and one window spanning the budget (5)."""
+def test_pagerank_loop_matches_python_replica(spark, edges):
+    """The Spark PageRank loop's ranks equal a pure-Python replica of
+    the same integer update run for PR_ITERS rounds, on bidirectional
+    graphs (the registered query's edge construction)."""
     from pyspark.sql import functions as F
 
     from log_analysis_bigdata_spark.queries.graphq import (
         PR_DAMP_DEN,
         PR_DAMP_NUM,
         PR_INIT,
+        PR_ITERS,
         PR_JUMP,
         _pr_loop,
     )
@@ -407,8 +403,6 @@ def test_pagerank_early_exit_matches_python_replica(
         {(a, b) for a, b in edges if a != b}
         | {(b, a) for a, b in edges if a != b}
     )
-    if not sym:
-        return
     df = spark.createDataFrame(sym, "src bigint, dst bigint")
     deg = (
         df.groupBy("src")
@@ -419,10 +413,7 @@ def test_pagerank_early_exit_matches_python_replica(
         "node", F.lit(PR_INIT).cast("bigint").alias("rank")
     )
     contrib = df.join(deg.withColumnRenamed("node", "src"), "src")
-    budget = 5
-    ranks, rounds = _pr_loop(
-        contrib, ranks0, max_iter=budget, checkpoint_every=checkpoint_every
-    )
+    ranks = _pr_loop(contrib, ranks0)
     got = {r["node"]: r["rank"] for r in ranks.collect()}
 
     outdeg: dict[int, int] = {}
@@ -436,36 +427,9 @@ def test_pagerank_early_exit_matches_python_replica(
         return {n: PR_JUMP + v for n, v in acc.items()}
 
     expect = {n: PR_INIT for n in outdeg}
-    for _ in range(rounds):
+    for _ in range(PR_ITERS):
         expect = step(expect)
     assert got == expect
-    assert 1 <= rounds <= budget
-    if rounds < budget:  # exact-fixpoint exit: one more round is a no-op
-        assert step(expect) == expect
-
-
-def test_pagerank_shift_threshold_stops_loop(spark):
-    """stop_shift mode: a threshold above any possible round movement
-    stops the loop after its first round."""
-    from pyspark.sql import functions as F
-
-    from log_analysis_bigdata_spark.queries.graphq import PR_INIT, _pr_loop
-
-    df = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (2, 1), (3, 2), (1, 3)],
-        "src bigint, dst bigint",
-    )
-    deg = (
-        df.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("outdeg"))
-        .withColumnRenamed("src", "node")
-    )
-    ranks0 = deg.select("node", F.lit(PR_INIT).cast("bigint").alias("rank"))
-    contrib = df.join(deg.withColumnRenamed("node", "src"), "src")
-    _ranks, rounds = _pr_loop(
-        contrib, ranks0, max_iter=10, stop_shift=10**15
-    )
-    assert rounds == 1
 
 
 def test_simhash_py_closure_equals_recursive_cte_oracle():
