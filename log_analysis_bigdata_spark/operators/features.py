@@ -9,10 +9,11 @@
   ``withColumn(aggregate(filter(...)))`` higher-order-function columns.
   We provide both semantically-equal forms and cross-check them in tests:
   (a) the HOF form as one single select (no 29-deep plan nesting — the
-  reference's plan hazard, SURVEY §4), and (b) an ``explode`` +
-  ``groupBy().pivot(values).count()`` form. At 100 TB the pivot form is
-  preferred: one shuffle with map-side partial counts on (key, event_id)
-  instead of shipping whole event arrays.
+  reference's plan hazard, SURVEY §4), which serves the speed layer
+  (streaming.job.message_features counts each message's own EventId
+  array, no shuffle), and (b) a ``groupBy().pivot(values).count()``
+  form, which serves the batch layer: one shuffle with map-side partial
+  counts on (key, event_id) instead of shipping whole event arrays.
 """
 
 from __future__ import annotations

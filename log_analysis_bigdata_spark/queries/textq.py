@@ -30,6 +30,7 @@ from ..functions.text import (
     symbol_count,
     tokens,
 )
+from ..operators.dedup import band_digests, candidate_pairs, shingle_sets
 
 
 from . import register
@@ -40,8 +41,6 @@ def _mix(h, seed: int):
     functions.text.minhash_component's per-element mix)."""
     a, b = minhash_mix_consts(seed)
     return (F.lit(a) * (h % F.lit(MINHASH_P)) + F.lit(b)) % F.lit(MINHASH_P)
-
-N_MINHASH = 8  # signature width; 2 bands × 4 rows
 
 
 def _tokens(col: str = "text") -> Column:
@@ -207,13 +206,16 @@ _BANDS_SQL = f"""
 )
 def minhash_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidate pairs: shingle → 8-component signature →
-    2 bands × 4 rows → per-band equi-join, union, distinct.
+    2 bands × 4 rows → candidates, run by operators.dedup's stages.
 
-    The oracle's OR-join is expressed as a union of two equi-joins so
-    each band join stays hash-partitioned (never quadratic). The band
-    table is persisted before the self-join — at 100 TB you'd write the
-    signature table out and bucket it by band; persist is the local-mode
-    stand-in for that materialization.
+    The oracle's OR-join is ``candidate_pairs``' single equi-self-join
+    on (band index, digest) plus a distinct — the same set as one join
+    per band, and hash-partitioned, never quadratic. Docs with < 3
+    tokens are dropped by ``shingle_sets`` (their all-NULL bands never
+    equi-join in the oracle either). The band table is persisted before
+    the self-join — at 100 TB you'd write the signature table out and
+    bucket it by band; persist is the local-mode stand-in for that
+    materialization.
     """
     # repartition: the doc corpus is one small input split locally —
     # spread the shingle+md5-heavy stages across all cores. persist(sh):
@@ -224,37 +226,7 @@ def minhash_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _dup_corpus_spark(spark, sf_dir).repartition(
         spark.sparkContext.defaultParallelism
     )
-    # docs with < 3 tokens have EMPTY hs -> all-NULL sigs; concat_ws
-    # skips NULLs, so without this filter every such doc would share
-    # band digest md5("") and all-pair as candidates — while the
-    # oracle's NULL band never equi-joins (code-review r7). Dropping
-    # them mirrors shingle_sets' policy (and the oracle's no-join).
-    sh = (
-        corpus.select(
-            "doc_id", shingle_hashes(shingles(_tokens())).alias("hs")
-        )
-        .filter(F.size("hs") > 0)
-        .persist()
-    )
-    sigs = [minhash_component(F.col("hs"), i) for i in range(N_MINHASH)]
-    bands = sh.select(
-        "doc_id",
-        F.md5(
-            F.concat_ws("|", *[c.cast("string") for c in sigs[0:4]])
-        ).alias("band0"),
-        F.md5(
-            F.concat_ws("|", *[c.cast("string") for c in sigs[4:8]])
-        ).alias("band1"),
-    ).persist()
-    pairs = None
-    for band in ("band0", "band1"):
-        a = bands.select(F.col("doc_id").alias("doc_a"), F.col(band).alias("b"))
-        b = bands.select(F.col("doc_id").alias("doc_b"), F.col(band).alias("b"))
-        p = a.join(b, "b").filter(F.col("doc_a") < F.col("doc_b")).select(
-            "doc_a", "doc_b"
-        )
-        pairs = p if pairs is None else pairs.unionByName(p)
-    return pairs.distinct()
+    return candidate_pairs(band_digests(shingle_sets(corpus).persist()).persist())
 
 
 @register(
@@ -503,6 +475,36 @@ def _simhash_sql() -> str:
     return bit_votes
 
 
+def _simhash16(frame: DataFrame) -> DataFrame:
+    """(doc_id, simhash) over ``frame(doc_id, text)`` — the Spark twin
+    of ``_TOKH_SQL`` + ``_simhash_sql``: each distinct token hashed to
+    16 bits once (one transform, projected as ``hs``), then per bit
+    position the majority vote across tokens as a HOF sum over ``hs``."""
+    tok_hash = F.transform(
+        F.array_distinct(F.split(F.trim(F.col("text")), " +")),
+        lambda t: F.conv(F.substring(F.md5(t), 1, 4), 16, 10).cast("int"),
+    )
+    hs = frame.select("doc_id", tok_hash.alias("hs"))
+
+    def bit_vote(j: int):
+        # closure factory: a 2-arg lambda would receive (element, index)
+        return lambda h: (F.shiftright(h, j) % 2) * 2 - 1
+
+    simhash = sum(
+        F.when(
+            F.aggregate(
+                F.transform(F.col("hs"), bit_vote(j)),
+                F.lit(0),
+                lambda acc, x: acc + x,
+            )
+            > 0,
+            1 << j,
+        ).otherwise(0)
+        for j in range(SIMHASH_BITS)
+    )
+    return hs.select("doc_id", simhash.cast("int").alias("simhash"))
+
+
 @register(
     "simhash_text_docs",
     oracle=f"""
@@ -525,30 +527,7 @@ def simhash_text_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan. Exact copies provably collide (same token set → same
     votes).
     """
-    docs = load_table(spark, sf_dir, "documents")
-    tok_hash = F.transform(
-        F.array_distinct(F.split(F.trim(F.col("text")), " +")),
-        lambda t: F.conv(F.substring(F.md5(t), 1, 4), 16, 10).cast("int"),
-    )
-    hs = docs.select("doc_id", tok_hash.alias("hs"))
-
-    def bit_vote(j: int):
-        # closure factory: a 2-arg lambda would receive (element, index)
-        return lambda h: (F.shiftright(h, j) % 2) * 2 - 1
-
-    simhash = sum(
-        F.when(
-            F.aggregate(
-                F.transform(F.col("hs"), bit_vote(j)),
-                F.lit(0),
-                lambda acc, x: acc + x,
-            )
-            > 0,
-            1 << j,
-        ).otherwise(0)
-        for j in range(SIMHASH_BITS)
-    )
-    return hs.select("doc_id", simhash.cast("int").alias("simhash"))
+    return _simhash16(load_table(spark, sf_dir, "documents"))
 
 
 @register(
@@ -571,33 +550,11 @@ def simhash_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeper — the signature-equality rendering of dedup (vs content-hash
     equality in dedup_exact_docs). One narrow signature pass + one
     groupBy shuffle on a 2-byte key; for Hamming-tolerant matching at
-    scale, band the signature and OR the per-band equi-joins exactly as
-    minhash_dup_pairs does.
+    scale, band the signature and equi-join on (band index, band value)
+    as minhash_dup_pairs does.
     """
-    corpus = _dup_corpus_spark(spark, sf_dir)
-    tok_hash = F.transform(
-        F.array_distinct(F.split(F.trim(F.col("text")), " +")),
-        lambda t: F.conv(F.substring(F.md5(t), 1, 4), 16, 10).cast("int"),
-    )
-    hs = corpus.select("doc_id", tok_hash.alias("hs"))
-
-    def bit_vote(j: int):
-        return lambda h: (F.shiftright(h, j) % 2) * 2 - 1
-
-    simhash = sum(
-        F.when(
-            F.aggregate(
-                F.transform(F.col("hs"), bit_vote(j)),
-                F.lit(0),
-                lambda acc, x: acc + x,
-            )
-            > 0,
-            1 << j,
-        ).otherwise(0)
-        for j in range(SIMHASH_BITS)
-    )
     return (
-        hs.select("doc_id", simhash.cast("int").alias("simhash"))
+        _simhash16(_dup_corpus_spark(spark, sf_dir))
         .groupBy("simhash")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),

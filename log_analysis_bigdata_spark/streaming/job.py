@@ -8,12 +8,18 @@ Reference pipeline (per message, kafka_consumer.py:27-40):
   insert_data_to_HBase.py:6-46  stringify + put (last-write-wins upsert)
 
 Engine rendering: one Structured Streaming query. The parse/template/
-feature transform is the SAME batch code (functions.logparse /
-functions.templates / operators.features) applied to the exploded
-``log_full`` lines — this kills Skew-1..4 by construction. Scoring is a
-column expression (or the ml.inference pandas-UDF for a real model);
-the sink is a keyed last-write-wins parquet upsert via foreachBatch
-(locally; Delta MERGE on a real deployment).
+feature transform is the SAME batch code applied to the split
+``log_full`` lines: functions.logparse's message regex,
+functions.templates' EventId tagger and operators.features'
+``feature_counts_hof`` counter — this kills Skew-1..4 by construction.
+The per-line EventId array is projected as its own column before the
+counter reads it: a Column reused inside many HOFs in one ``select`` is
+evaluated once per use (HOF bodies get no CSE), so inlining it would run
+the template ``rlike`` chain once per event id. Scoring is a column
+expression (or the ml.inference pandas-UDF for a real model) with
+ml.inference's 0.83 threshold; the sink is a keyed last-write-wins
+parquet upsert via foreachBatch (locally; Delta MERGE on a real
+deployment).
 """
 
 from __future__ import annotations
@@ -24,7 +30,10 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.logparse import RE_MESSAGE
 from ..functions.templates import event_id_expr
+from ..ml.inference import threshold_prediction
+from ..operators.features import feature_counts_hof
 from ..schemas import SESSION_MESSAGE
 
 
@@ -84,28 +93,23 @@ def message_features(
 
     Each message is a self-contained session snapshot (transform.py:75-86
     keys the feature row by the *message's* BlockId), so counts are
-    computed per row with array HOFs — split → per-line template tag →
-    size(filter(...)) per event id. Completely stateless: no shuffle, no
-    streaming aggregation state, so redelivery of a key REPLACES instead
-    of accumulating (the reference's HBase-put semantics), and the
-    stream stage stays a narrow map at any scale.
+    computed per row: split → per-line template tag → the batch layer's
+    ``feature_counts_hof``. The EventId array is projected once as
+    ``event_seq`` first: the counter reads it inside one HOF per event
+    id, and an inlined array would re-run the template ``rlike`` chain
+    in each of them. Completely stateless: no shuffle, no streaming
+    aggregation state, so redelivery of a key REPLACES instead of
+    accumulating (the reference's HBase-put semantics), and the stream
+    stage stays a narrow map at any scale.
     """
-    from ..functions.logparse import RE_MESSAGE
-
     eids = F.transform(
         F.split("log_full", "\n"),
         lambda v: event_id_expr(
             templates, F.regexp_extract(v, RE_MESSAGE, 1)
         ),
     )
-    def eq(e: str):
-        # closure factory: a 2-arg lambda would receive (element, index)
-        return lambda x: x == F.lit(e)
-
-    counts = [
-        F.size(F.filter(eids, eq(e))).cast("int").alias(e) for e in event_ids
-    ]
-    return messages.select("block_id", *counts)
+    seqs = messages.select("block_id", eids.alias("event_seq"))
+    return feature_counts_hof(seqs, "block_id", "event_seq", event_ids)
 
 
 def score_expr(event_ids: Sequence[str], weights: dict[str, float], bias: float):
@@ -123,12 +127,7 @@ def score_expr(event_ids: Sequence[str], weights: dict[str, float], bias: float)
 UPSERT_N_BUCKETS = 16
 
 
-def upsert_sink(
-    target_dir: str,
-    key_col: str,
-    order_col: str,
-    n_buckets: int = UPSERT_N_BUCKETS,
-):
+def upsert_sink(target_dir: str, key_col: str, order_col: str):
     """foreachBatch last-write-wins upsert into a parquet table
     partitioned by a stable hash bucket of the key.
 
@@ -138,47 +137,41 @@ def upsert_sink(
     is exactly what a Delta/Iceberg MERGE compiles to.
 
     Scale shape: the serving table lives partitioned by
-    ``_bucket = pmod(hash(key), n_buckets)``. Each micro-batch touches
-    ONLY the buckets its keys hash into — the read is partition-pruned
-    to those buckets and the write uses dynamic partition overwrite, so
-    untouched buckets' files are never read or rewritten. Cost per batch
-    is O(batch ∪ touched buckets), not O(whole table): the table can
-    grow without each epoch slowing down, which a full-table rewrite
-    (the previous rendering) cannot do. On a real deployment the same
-    plan is one ``MERGE INTO`` on a Delta table partitioned the same way.
+    ``_bucket = pmod(hash(key), UPSERT_N_BUCKETS)``. Each micro-batch
+    touches ONLY the buckets its keys hash into — the read is
+    partition-pruned to the touched buckets that already exist and the
+    write uses dynamic partition overwrite, so untouched buckets' files
+    are never read or rewritten. Cost per batch is O(batch ∪ touched
+    buckets), not O(whole table): the table can grow without each epoch
+    slowing down, which a full-table rewrite cannot do. On a real
+    deployment the same plan is one ``MERGE INTO`` on a Delta table
+    partitioned the same way.
     """
 
     def bucket_of(col):
-        return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
+        return F.pmod(F.xxhash64(col), F.lit(UPSERT_N_BUCKETS)).cast("int")
 
     def do_upsert(batch_df: DataFrame, epoch_id: int) -> None:
         from pyspark.sql.window import Window as W
 
         spark = batch_df.sparkSession
         batch = batch_df.withColumn("_bucket", bucket_of(F.col(key_col)))
-        # Tiny driver-side list (≤ n_buckets ints) — partition pruning,
-        # not data collection.
+        # Tiny driver-side list (≤ UPSERT_N_BUCKETS ints) — partition
+        # pruning, not data collection.
         touched = sorted(
             r["_bucket"] for r in batch.select("_bucket").distinct().collect()
         )
-        exists = os.path.isdir(target_dir) and any(
-            f.startswith("_bucket=") for f in os.listdir(target_dir)
-        )
-        if exists:
-            old = (
-                spark.read.option("basePath", target_dir)
-                .parquet(*[f"{target_dir}/_bucket={b}" for b in touched
-                           if os.path.isdir(f"{target_dir}/_bucket={b}")])
-                if any(
-                    os.path.isdir(f"{target_dir}/_bucket={b}") for b in touched
-                )
-                else None
-            )
+        old_dirs = [
+            d for d in (f"{target_dir}/_bucket={b}" for b in touched)
+            if os.path.isdir(d)
+        ]
+        merged = batch
+        if old_dirs:
             merged = (
-                old.unionByName(batch) if old is not None else batch
+                spark.read.option("basePath", target_dir)
+                .parquet(*old_dirs)
+                .unionByName(batch)
             )
-        else:
-            merged = batch
         w = W.partitionBy(key_col).orderBy(F.desc(order_col))
         deduped = (
             merged.withColumn("_rn", F.row_number().over(w))
@@ -240,7 +233,7 @@ def run_file_stream(
     feats = message_features(msgs, templates, event_ids)
     scored = feats.withColumn(
         "score", score_expr(event_ids, weights or {}, bias)
-    ).withColumn("prediction", (F.col("score") >= 0.83).cast("int")).withColumn(
+    ).withColumn("prediction", threshold_prediction(F.col("score"))).withColumn(
         "ts_ms", F.unix_millis(F.current_timestamp())
     )
     # availableNow (default) = the batch-replay harness; pass

@@ -10,6 +10,8 @@ reference's de-facto goldens; ours are computed from the same fixture).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from log_analysis_bigdata_spark.functions.logparse import parse_log_lines
@@ -23,6 +25,7 @@ from log_analysis_bigdata_spark.operators.sessionize import (
     label_sessions,
     sessionize,
 )
+from log_analysis_bigdata_spark.streaming.job import message_features
 
 TEMPLATES = [
     ("E1", "Receiving block[*]src:[*]dest:[*]"),
@@ -74,18 +77,28 @@ def test_template_and_traces_stage(spark):
 
 
 def test_feature_counts_both_variants_agree(spark):
+    """Batch pivot, batch HOF and the speed layer's per-message counter
+    give the same counts over the same raw lines."""
+    event_ids = [t[0] for t in TEMPLATES]
     tagged = tag_events(_parsed(spark), TEMPLATES, message_col="message")
     matched = tagged.filter(F.col("event_id").isNotNull())
-    pivot = feature_counts_pivot(
-        matched, "block_id", "event_id", [t[0] for t in TEMPLATES]
-    )
+    pivot = feature_counts_pivot(matched, "block_id", "event_id", event_ids)
     traces = event_traces(matched, "block_id", "datetime", "event_id")
-    hof = feature_counts_hof(
-        traces, "block_id", "event_seq", [t[0] for t in TEMPLATES]
+    hof = feature_counts_hof(traces, "block_id", "event_seq", event_ids)
+    # one session message per block, as the speed layer receives it
+    blocks: dict[str, list[str]] = {}
+    for line in RAW:
+        block = re.search(r"blk_[\-0-9]+", line).group(0)
+        blocks.setdefault(block, []).append(line)
+    msgs = spark.createDataFrame(
+        [(b, "\n".join(lines)) for b, lines in blocks.items()],
+        ["block_id", "log_full"],
     )
+    stream = message_features(msgs, TEMPLATES, event_ids)
     p = {r["block_id"]: (r["E1"], r["E2"], r["E3"]) for r in pivot.collect()}
     h = {r["block_id"]: (r["E1"], r["E2"], r["E3"]) for r in hof.collect()}
-    assert p == h == {"blk_1": (1, 1, 1), "blk_2": (1, 1, 0)}
+    m = {r["block_id"]: (r["E1"], r["E2"], r["E3"]) for r in stream.collect()}
+    assert p == h == m == {"blk_1": (1, 1, 1), "blk_2": (1, 1, 0)}
 
 
 def test_session_and_label_stage(spark):

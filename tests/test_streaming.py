@@ -165,6 +165,32 @@ def test_message_features_batch_stream_shared(spark):
     assert (row["E1"], row["E2"], row["E3"]) == (2, 3, 0)
 
 
+def test_message_features_tags_each_line_once(spark):
+    """The per-line template chain runs once per line, not once per
+    event id: each template's regex appears exactly once in the
+    executed plan (a Column reused inside several HOFs of one select is
+    evaluated once per use, so the EventId array must be projected
+    before the counter reads it)."""
+    from log_analysis_bigdata_spark.functions.templates import (
+        compile_template_regex,
+    )
+
+    m = _msg("blk_-5", 1, 1)
+    msgs = spark.createDataFrame(
+        [(m["block_id"], m["log_full"])], "block_id string, log_full string"
+    )
+    plan = (
+        message_features(msgs, TEMPLATES, EVENT_IDS)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    counts = {
+        eid: plan.count(compile_template_regex(tmpl)) for eid, tmpl in TEMPLATES
+    }
+    assert counts == {eid: 1 for eid in EVENT_IDS}, plan
+
+
 def test_tumbling_window_streaming_matches_batch(spark, tmp_path):
     """The same windows code gives identical results in streaming
     (memory sink, availableNow) and batch over the same rows."""
