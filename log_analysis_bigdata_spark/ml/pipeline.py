@@ -78,12 +78,15 @@ def balanced_class_weights(
 ) -> DataFrame:
     """Attach `weight = N / (K * n_class)` to every row (`nb:597-607`).
 
-    The per-class count table is K rows — broadcast so the join back is
-    map-side at any scale.
+    The per-class count table is K rows: one ``collect`` gives both N and
+    K, and the table is broadcast so the join back is map-side at any
+    scale. An empty training set raises ``ValueError``.
     """
     cnt = train.groupBy(label_col).agg(F.count(F.lit(1)).alias("n"))
-    n_total = cnt.agg(F.sum("n")).first()[0]
-    k = cnt.count()
+    counts = cnt.collect()
+    if not counts:
+        raise ValueError("balanced_class_weights: empty training set")
+    n_total, k = sum(r["n"] for r in counts), len(counts)
     weights = cnt.select(
         label_col, (F.lit(float(n_total)) / (F.lit(k) * F.col("n"))).alias(weight_col)
     )

@@ -22,11 +22,23 @@ Operator shapes (all narrow — no shuffle, linear scale-out):
   the downstream schema/batch contract is testable.
 - :func:`resize_plan` — pure-column resize arithmetic (target dims,
   scale factors) that would parameterize the decoder.
+
+Two private shells hold every per-format Arrow loop, so each codec keeps
+only its parser or builder:
+- :func:`_per_asset` — the one decode ``mapInPandas``: ``row(payload)``
+  per asset gives one output row (every ``*_stats`` decoder, the PPM
+  decode, the dHash signature and the decode stub).
+- :func:`_synth` — the one synthesizer ``mapInPandas``:
+  ``build_one(doc_id)`` gives one payload per document, against
+  :data:`PAYLOAD_SCHEMA`.
+:func:`_rgb_stats` is the one full-image-mean plus
+``RESIZE_TARGET``×``RESIZE_TARGET`` nearest-neighbour stats row shared by
+the PPM/BMP/GIF/PNG pixel-stats operators.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -60,13 +72,69 @@ def _spread(key_df: DataFrame) -> DataFrame:
     — a strict NO-OP (no Exchange node at all) when the reader already
     yields >= cores splits, instead of the former repartition-to-the-
     same-count, so at production scale no byte ever moves. Applied ONLY
-    in front of decode-heavy Python chains (jpeg/gif/png, the dHash
-    near-dup pass): for the trivial decoders (ppm/bmp/wav/avi) the
-    exchange costs more than the single-core decode it parallelizes —
-    a driver-confirmed r17 regression (+0.5 s combined), reverted r18."""
+    in front of decode-heavy Python chains (jpeg/gif/png): for the
+    trivial decoders (ppm, including the dHash near-dup fixture, and
+    bmp/wav/avi) the exchange costs more than the single-core decode it
+    parallelizes — a measured r17 regression (+0.5 s combined),
+    reverted r18.
+
+    This is the one statement of that policy: the five decode-heavy
+    synthesizers (gif, png, jpeg, jpeg_color, jpeg_422) pass their id
+    frame through here; the other synthesizers and every decoder run
+    with no exchange, and their docstrings point here."""
     from ..catalog import spread_scan
 
     return spread_scan(key_df)
+
+
+PAYLOAD_SCHEMA = StructType(
+    [
+        StructField("asset_id", LongType()),
+        StructField("payload", BinaryType()),
+    ]
+)
+
+
+def _synth(ids: DataFrame, build_one: Callable[[int], bytes]) -> DataFrame:
+    """(asset_id, payload) per ``doc_id`` of ``ids``: the one synthesizer
+    ``mapInPandas``. ``build_one(doc_id)`` returns the payload bytes.
+    Callers pass the id frame, spread or not (see :func:`_spread`)."""
+
+    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "asset_id": pdf["doc_id"],
+                    "payload": [build_one(int(d)) for d in pdf["doc_id"]],
+                }
+            )
+
+    return ids.mapInPandas(build, PAYLOAD_SCHEMA)
+
+
+def _per_asset(
+    assets: DataFrame, schema: StructType, row: Callable[[bytes], tuple]
+) -> DataFrame:
+    """The one decode ``mapInPandas``: a narrow, Arrow-batched pass over
+    ``(asset_id, payload)`` that calls ``row(payload_bytes)`` once per
+    asset. ``row`` returns the schema's fields after the first, in order;
+    the first field (named by the schema, e.g. ``doc_id``) is the asset
+    id. Each task decodes only its partition's assets, so throughput
+    scales with executors and no payload is shuffled."""
+    names = schema.fieldNames()
+
+    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                [
+                    (aid, *row(bytes(payload)))
+                    for aid, payload in zip(pdf["asset_id"], pdf["payload"])
+                ],
+                columns=names,
+            )
+
+    return assets.select("asset_id", "payload").mapInPandas(decode, schema)
+
 
 ASSET_SCHEMA = StructType(
     [
@@ -198,6 +266,12 @@ DECODED_SCHEMA = StructType(
 )
 
 
+def _stub_row(buf: bytes) -> tuple[int, int, int, float]:
+    a = np.frombuffer(buf, dtype=np.uint8)
+    n = 1 if a.size else 0
+    return a.size, n, n, (float(a.mean()) if a.size else 0.0)
+
+
 def decode_image_stub(assets: DataFrame, fake: bool = False) -> DataFrame:
     """Decode image payloads → (dims, channel stats). STUB — for the
     general photographic path only. Seven formats decode for real with
@@ -221,26 +295,10 @@ def decode_image_stub(assets: DataFrame, fake: bool = False) -> DataFrame:
             "gray/4:4:4/4:2:2/4:4:0/4:2:0 JPEG decodes for real via "
             "_parse_jpeg* — pass fake=True for the deterministic stub"
         )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            arrs = [np.frombuffer(p, dtype=np.uint8) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "width": [a.size for a in arrs],
-                    "height": [1 if a.size else 0 for a in arrs],
-                    "channels": [1 if a.size else 0 for a in arrs],
-                    "mean_pixel": [
-                        float(a.mean()) if a.size else 0.0 for a in arrs
-                    ],
-                }
-            )
-
-    return (
-        assets.filter(F.col("media_type") == "image")
-        .select("asset_id", "payload")
-        .mapInPandas(decode, DECODED_SCHEMA)
+    return _per_asset(
+        assets.filter(F.col("media_type") == "image"),
+        DECODED_SCHEMA,
+        _stub_row,
     )
 
 
@@ -260,21 +318,20 @@ def resize_plan(assets: DataFrame, target: int = 224) -> DataFrame:
     )
 
 
-def _ppm_header(buf: bytes) -> tuple[int, int, int]:
-    """Parse a P6 header; returns (width, height, raster_offset)."""
-    w, h, _c, _m, pos = _parse_ppm_full(buf)
-    return w, h, pos
-
-
 def _parse_ppm(buf: bytes) -> tuple[int, int, int, float]:
     """Parse one binary netpbm P6 image: header ``P6 <w> <h> <maxval>``
     (ASCII tokens, ``#`` comments allowed) + one whitespace byte + raw
     interleaved RGB. Returns (width, height, channels, mean_pixel)."""
-    w, h, c, m, _pos = _parse_ppm_full(buf)
-    return w, h, c, m
+    w, h, px = _ppm_pixels(buf)
+    return w, h, 3, (float(px.mean()) if px.size else 0.0)
 
 
-def _parse_ppm_full(buf: bytes) -> tuple[int, int, int, float, int]:
+def _ppm_pixels(buf: bytes) -> tuple[int, int, np.ndarray]:
+    """Parse one P6 payload into (width, height, top-down row-major RGB
+    uint8 array of shape (h, w, 3)). The raster is read at the header
+    parser's offset: suffix arithmetic (len - w*h*3) would silently shift
+    every pixel of a payload with trailing bytes, which the parser
+    tolerates."""
     if not buf.startswith(b"P6"):
         raise ValueError("not a P6 PPM payload")
     pos, vals = 2, []
@@ -303,8 +360,8 @@ def _parse_ppm_full(buf: bytes) -> tuple[int, int, int, float, int]:
     n = w * h * 3
     if len(buf) < pos + n:
         raise ValueError("truncated PPM raster")
-    data = np.frombuffer(buf, dtype=np.uint8, count=n, offset=pos)
-    return w, h, 3, (float(data.mean()) if n else 0.0), pos
+    px = np.frombuffer(buf, dtype=np.uint8, count=n, offset=pos)
+    return w, h, px.reshape(h, w, 3)
 
 
 def decode_ppm_images(assets: DataFrame) -> DataFrame:
@@ -320,28 +377,7 @@ def decode_ppm_images(assets: DataFrame) -> DataFrame:
     each task decodes only its partition's assets, so throughput scales
     with executors exactly like byte_stats.
     """
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                "asset_id": [],
-                "width": [],
-                "height": [],
-                "channels": [],
-                "mean_pixel": [],
-            }
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, c, m = _parse_ppm(bytes(payload))
-                rows["asset_id"].append(aid)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["channels"].append(c)
-                rows["mean_pixel"].append(m)
-            yield pd.DataFrame(rows)
-
-    return assets.select("asset_id", "payload").mapInPandas(
-        decode, DECODED_SCHEMA
-    )
+    return _per_asset(assets, DECODED_SCHEMA, _parse_ppm)
 
 
 # ---------------------------------------------------------------------------
@@ -366,6 +402,37 @@ PPM_PIXEL_SCHEMA = StructType(
 )
 
 
+RESIZE_TARGET = 2  # the NN resize is RESIZE_TARGET x RESIZE_TARGET
+
+
+def _rgb_stats(w: int, h: int, px: np.ndarray) -> tuple[int, ...]:
+    """The :data:`PPM_PIXEL_SCHEMA` row after ``asset_id`` for one decoded
+    top-down RGB (h, w, 3) image: full-image ``mean_pixel_e4`` plus the
+    per-channel means of the ``RESIZE_TARGET``×``RESIZE_TARGET`` nearest-
+    neighbour resize, as integer micro-units in int64 arithmetic. The NN
+    index map is the floor scale ``src = (dst * src_dim) // RESIZE_TARGET``,
+    so the DuckDB oracle replays it exactly."""
+    px = px.astype(np.int64)
+    ys = (np.arange(RESIZE_TARGET) * h) // RESIZE_TARGET
+    xs = (np.arange(RESIZE_TARGET) * w) // RESIZE_TARGET
+    ch = px[np.ix_(ys, xs)].sum(axis=(0, 1))  # exact int per channel
+    n_rz = RESIZE_TARGET * RESIZE_TARGET
+    return (
+        w,
+        h,
+        int(10_000 * px.sum()) // (w * h * 3),
+        *(int(10_000 * c) // n_rz for c in ch),
+    )
+
+
+def _ppm_payload(d: int) -> bytes:
+    w, h = 4 + d % 5, 3 + d % 4
+    raster = ((d * 7 + np.arange(w * h * 3, dtype=np.int64)) % 256).astype(
+        np.uint8
+    )
+    return b"P6\n%d %d\n255\n" % (w, h) + raster.tobytes()
+
+
 def synth_ppm_assets(docs: DataFrame) -> DataFrame:
     """(asset_id, payload): deterministic binary P6 PPM image per
     document — the acquisition stand-in (the container has no image
@@ -377,81 +444,22 @@ def synth_ppm_assets(docs: DataFrame) -> DataFrame:
 
     Narrow mapInPandas (Arrow in/out); numpy builds each raster in one
     vectorized modular-arithmetic pass."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 4 + d % 5, 3 + d % 4
-                raster = (
-                    (d * 7 + np.arange(w * h * 3, dtype=np.int64)) % 256
-                ).astype(np.uint8)
-                payloads.append(
-                    b"P6\n%d %d\n255\n" % (w, h) + raster.tobytes()
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        build,
-        StructType(
-            [
-                StructField("asset_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
+    return _synth(docs.select("doc_id"), _ppm_payload)
 
 
-def ppm_pixel_stats(assets: DataFrame, target: int = 2) -> DataFrame:
+def ppm_pixel_stats(assets: DataFrame) -> DataFrame:
     """Decode P6 payloads to pixel arrays, nearest-neighbor-resize to
-    ``target``×``target``, and report per-channel means of the RESIZED
-    image plus the full-image mean — arithmetic on decoded pixel VALUES
-    (not payload bytes), which is what distinguishes this from
-    byte_stats. NN index map is the standard floor scale:
-    ``src = (dst * src_dim) // target`` — integer arithmetic, so the
-    DuckDB oracle replays it exactly.
+    ``RESIZE_TARGET``×``RESIZE_TARGET``, and report per-channel means of
+    the RESIZED image plus the full-image mean (:func:`_rgb_stats`) —
+    arithmetic on decoded pixel VALUES (not payload bytes), which is what
+    distinguishes this from byte_stats.
 
     Scale: narrow Arrow-batched mapInPandas; each task decodes and
     resizes only its partition's assets — same linear scale-out as every
     other decode-family operator."""
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in PPM_PIXEL_SCHEMA.fields}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                buf = bytes(payload)
-                # decode at the PARSER's raster offset — suffix
-                # arithmetic (len - w*h*3) would silently shift every
-                # pixel on a payload with trailing bytes, which the
-                # header parser tolerates (code-review r7)
-                w, h, off = _ppm_header(buf)
-                px = (
-                    np.frombuffer(
-                        buf, dtype=np.uint8, count=w * h * 3, offset=off
-                    )
-                    .reshape(h, w, 3)
-                    .astype(np.int64)
-                )
-                ys = (np.arange(target) * h) // target
-                xs = (np.arange(target) * w) // target
-                resized = px[np.ix_(ys, xs)]  # (target, target, 3) NN
-                ch = resized.sum(axis=(0, 1))  # exact int per channel
-                n_rz = target * target
-                out["asset_id"].append(aid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mean_pixel_e4"].append(
-                    int(10_000 * px.sum()) // (w * h * 3)
-                )
-                out["r_mean_e4"].append(int(10_000 * ch[0]) // n_rz)
-                out["g_mean_e4"].append(int(10_000 * ch[1]) // n_rz)
-                out["b_mean_e4"].append(int(10_000 * ch[2]) // n_rz)
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(stats, PPM_PIXEL_SCHEMA)
+    return _per_asset(
+        assets, PPM_PIXEL_SCHEMA, lambda b: _rgb_stats(*_ppm_pixels(b))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -520,6 +528,16 @@ def _build_bmp(w: int, h: int, px: np.ndarray, top_down: bool) -> bytes:
     return file_hdr + info_hdr + raster
 
 
+def _bmp_payload(d: int) -> bytes:
+    w, h = 5 + d % 4, 2 + d % 5
+    px = (
+        ((d * 11 + np.arange(w * h * 3, dtype=np.int64)) % 256)
+        .astype(np.uint8)
+        .reshape(h, w, 3)
+    )
+    return _build_bmp(w, h, px, top_down=d % 3 == 0)
+
+
 def synth_bmp_assets(docs: DataFrame) -> DataFrame:
     """(asset_id, payload): deterministic 24-bit BMP per document.
     Logical image (top-down row-major RGB): sample i = (y*w + x)*3 + c
@@ -530,64 +548,18 @@ def synth_bmp_assets(docs: DataFrame) -> DataFrame:
     bytes are a padded, channel-swapped, (usually) row-reversed
     permutation of that logical image — a decoder that skips any of
     the three transforms cannot match the oracle's closed form."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 5 + d % 4, 2 + d % 5
-                px = (
-                    ((d * 11 + np.arange(w * h * 3, dtype=np.int64)) % 256)
-                    .astype(np.uint8)
-                    .reshape(h, w, 3)
-                )
-                payloads.append(_build_bmp(w, h, px, top_down=d % 3 == 0))
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        build,
-        StructType(
-            [
-                StructField("asset_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
+    return _synth(docs.select("doc_id"), _bmp_payload)
 
 
-def bmp_pixel_stats(assets: DataFrame, target: int = 2) -> DataFrame:
+def bmp_pixel_stats(assets: DataFrame) -> DataFrame:
     """Decode 24-bit BMP payloads and report the same integer
     micro-unit stats as ppm_pixel_stats (full-image mean + per-channel
-    means of the ``target``x``target`` NN resize) over the decoded
-    top-down RGB image. Same fused narrow mapInPandas shape — zero
-    shuffle, linear scale-out."""
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in PPM_PIXEL_SCHEMA.fields}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, px = _parse_bmp(bytes(payload))
-                px = px.astype(np.int64)
-                ys = (np.arange(target) * h) // target
-                xs = (np.arange(target) * w) // target
-                resized = px[np.ix_(ys, xs)]
-                ch = resized.sum(axis=(0, 1))
-                n_rz = target * target
-                out["asset_id"].append(aid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mean_pixel_e4"].append(
-                    int(10_000 * px.sum()) // (w * h * 3)
-                )
-                out["r_mean_e4"].append(int(10_000 * ch[0]) // n_rz)
-                out["g_mean_e4"].append(int(10_000 * ch[1]) // n_rz)
-                out["b_mean_e4"].append(int(10_000 * ch[2]) // n_rz)
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(stats, PPM_PIXEL_SCHEMA)
+    means of the ``RESIZE_TARGET``x``RESIZE_TARGET`` NN resize,
+    :func:`_rgb_stats`) over the decoded top-down RGB image. Same fused
+    narrow mapInPandas shape — zero shuffle, linear scale-out."""
+    return _per_asset(
+        assets, PPM_PIXEL_SCHEMA, lambda b: _rgb_stats(*_parse_bmp(b))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -811,6 +783,16 @@ def _parse_gif(buf: bytes) -> tuple[int, int, np.ndarray]:
     return w, h, gct[idx]
 
 
+def _gif_payload(d: int) -> bytes:
+    w, h = (20, 15) if d % 5 == 0 else (4 + d % 5, 2 + d % 4)
+    idx = (
+        ((d * 13 + np.arange(w * h, dtype=np.int64)) % 256)
+        .astype(np.uint8)
+        .reshape(h, w)
+    )
+    return _build_gif(w, h, idx, interlaced=d % 4 == 0)
+
+
 def synth_gif_assets(docs: DataFrame) -> DataFrame:
     """(asset_id, payload): deterministic GIF87a per document. Logical
     index at position p = (doc_id*13 + p) % 256 over top-down row-major
@@ -820,67 +802,20 @@ def synth_gif_assets(docs: DataFrame) -> DataFrame:
     LZW compression of the (possibly interlaced) index stream — a
     decoder that skips de-interlacing, palette mapping, or any LZW
     mechanism (width growth, KwKwK, sub-block reassembly) cannot match
-    the oracle's closed form."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                if d % 5 == 0:
-                    w, h = 20, 15
-                else:
-                    w, h = 4 + d % 5, 2 + d % 4
-                idx = (
-                    ((d * 13 + np.arange(w * h, dtype=np.int64)) % 256)
-                    .astype(np.uint8)
-                    .reshape(h, w)
-                )
-                payloads.append(_build_gif(w, h, idx, interlaced=d % 4 == 0))
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    return _spread(docs.select("doc_id")).mapInPandas(
-        build,
-        StructType(
-            [
-                StructField("asset_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
+    the oracle's closed form. LZW encoding is decode-heavy, so the ids
+    are spread first (:func:`_spread`)."""
+    return _synth(_spread(docs.select("doc_id")), _gif_payload)
 
 
-def gif_pixel_stats(assets: DataFrame, target: int = 2) -> DataFrame:
+def gif_pixel_stats(assets: DataFrame) -> DataFrame:
     """Decode GIF87a payloads and report the same integer micro-unit
     stats as the PPM/BMP twins (full-image mean + per-channel means of
-    the ``target``x``target`` NN resize) over the decoded top-down RGB
-    image. Same fused narrow mapInPandas shape — id-spread, no payload shuffle."""
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in PPM_PIXEL_SCHEMA.fields}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, px = _parse_gif(bytes(payload))
-                px = px.astype(np.int64)
-                ys = (np.arange(target) * h) // target
-                xs = (np.arange(target) * w) // target
-                resized = px[np.ix_(ys, xs)]
-                ch = resized.sum(axis=(0, 1))
-                n_rz = target * target
-                out["asset_id"].append(aid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mean_pixel_e4"].append(
-                    int(10_000 * px.sum()) // (w * h * 3)
-                )
-                out["r_mean_e4"].append(int(10_000 * ch[0]) // n_rz)
-                out["g_mean_e4"].append(int(10_000 * ch[1]) // n_rz)
-                out["b_mean_e4"].append(int(10_000 * ch[2]) // n_rz)
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(stats, PPM_PIXEL_SCHEMA)
+    the ``RESIZE_TARGET``x``RESIZE_TARGET`` NN resize, :func:`_rgb_stats`)
+    over the decoded top-down RGB image. Same fused narrow mapInPandas
+    shape — no payload shuffle."""
+    return _per_asset(
+        assets, PPM_PIXEL_SCHEMA, lambda b: _rgb_stats(*_parse_gif(b))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -897,6 +832,20 @@ def gif_pixel_stats(assets: DataFrame, target: int = 2) -> DataFrame:
 
 DHASH_ROWS = 10  # grid rows sampled from the decoded raster
 DHASH_COLS = 7   # grid cols sampled; 6 comparisons/row -> 60 bits
+
+
+def _ppm_dup_payload(d: int) -> bytes:
+    if d % 10 == 1:
+        base, delta, note = d - 1, 0, b"# re-encoded copy\n"
+    elif d % 10 == 6:
+        base, delta, note = d - 2, 4, b""
+    else:
+        base, delta, note = d, 0, b""
+    w, h = 4 + base % 5, 3 + base % 4
+    i = np.arange(w * h * 3, dtype=np.int64)
+    raster = (base * 7 + i * (1 + base % 37) + (i % 3) * (base % 29)) % 256
+    raster = np.minimum(raster + delta, 255).astype(np.uint8)
+    return b"P6\n" + note + b"%d %d\n255\n" % (w, h) + raster.tobytes()
 
 
 def synth_ppm_dup_assets(docs: DataFrame) -> DataFrame:
@@ -920,41 +869,31 @@ def synth_ppm_dup_assets(docs: DataFrame) -> DataFrame:
       the 5-band pigeonhole guarantee.
 
     Narrow mapInPandas, numpy-vectorized raster build."""
+    return _synth(docs.select("doc_id"), _ppm_dup_payload)
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                if d % 10 == 1:
-                    base, delta, note = d - 1, 0, b"# re-encoded copy\n"
-                elif d % 10 == 6:
-                    base, delta, note = d - 2, 4, b""
-                else:
-                    base, delta, note = d, 0, b""
-                w, h = 4 + base % 5, 3 + base % 4
-                i = np.arange(w * h * 3, dtype=np.int64)
-                raster = (
-                    base * 7 + i * (1 + base % 37) + (i % 3) * (base % 29)
-                ) % 256
-                raster = np.minimum(raster + delta, 255).astype(np.uint8)
-                payloads.append(
-                    b"P6\n" + note + b"%d %d\n255\n" % (w, h)
-                    + raster.tobytes()
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "payload": payloads}
-            )
 
-    return docs.select("doc_id").mapInPandas(
-        build,
-        StructType(
-            [
-                StructField("asset_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
+DHASH_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("simhash", LongType()),
+    ]
+)
+_DHASH_WEIGHTS = (
+    1 << np.arange(DHASH_ROWS * (DHASH_COLS - 1), dtype=np.int64)
+).reshape(DHASH_ROWS, DHASH_COLS - 1)
+
+
+def _dhash_row(buf: bytes) -> tuple[int]:
+    w, h, px = _ppm_pixels(buf)
+    g = px.astype(np.int64).sum(axis=2) // 3
+    grid = g[
+        np.ix_(
+            (np.arange(DHASH_ROWS) * h) // DHASH_ROWS,
+            (np.arange(DHASH_COLS) * w) // DHASH_COLS,
+        )
+    ]
+    bits = grid[:, 1:] > grid[:, :-1]
+    return (int((_DHASH_WEIGHTS * bits).sum()),)
 
 
 def ppm_dhash(assets: DataFrame) -> DataFrame:
@@ -971,44 +910,11 @@ def ppm_dhash(assets: DataFrame) -> DataFrame:
 
     Column names match the simhash family contract so the banded
     machinery applies unchanged. Narrow fused decode+signature
-    mapInPandas pass — NO exchange (r18: the trivial decode costs less than the r17 id-spread bought; scan splits parallelize it at scale), no payload shuffle, linear scale-out; at 100 TB the
-    signature column is the persisted artifact and pairing runs on it
-    alone (8 bytes/image), never on pixels."""
-
-    def sig(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gy = np.arange(DHASH_ROWS)
-        gx = np.arange(DHASH_COLS)
-        weights = (
-            1 << np.arange(DHASH_ROWS * (DHASH_COLS - 1), dtype=np.int64)
-        ).reshape(DHASH_ROWS, DHASH_COLS - 1)
-        for pdf in batches:
-            ids, sigs = [], []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                buf = bytes(payload)
-                w, h, off = _ppm_header(buf)
-                px = (
-                    np.frombuffer(
-                        buf, dtype=np.uint8, count=w * h * 3, offset=off
-                    )
-                    .reshape(h, w, 3)
-                    .astype(np.int64)
-                )
-                g = px.sum(axis=2) // 3
-                grid = g[np.ix_((gy * h) // DHASH_ROWS, (gx * w) // DHASH_COLS)]
-                bits = grid[:, 1:] > grid[:, :-1]
-                ids.append(aid)
-                sigs.append(int((weights * bits).sum()))
-            yield pd.DataFrame({"doc_id": ids, "simhash": sigs})
-
-    return assets.mapInPandas(
-        sig,
-        StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField("simhash", LongType()),
-            ]
-        ),
-    )
+    mapInPandas pass — no exchange (see :func:`_spread`), no payload
+    shuffle, linear scale-out; at 100 TB the signature column is the
+    persisted artifact and pairing runs on it alone (8 bytes/image),
+    never on pixels."""
+    return _per_asset(assets, DHASH_SCHEMA, _dhash_row)
 
 
 # ---------------------------------------------------------------------------
@@ -1155,26 +1061,23 @@ def synth_wav_assets(docs: DataFrame) -> DataFrame:
     document — see _build_wav for the planted chunk-walking pitfalls
     and _wav_params/_wav_samples for the closed form the DuckDB oracle
     recomputes. Narrow mapInPandas, one numpy pass per asset."""
+    return _synth(docs.select("doc_id"), _build_wav)
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["doc_id"],
-                    "payload": [
-                        _build_wav(int(doc_id)) for doc_id in pdf["doc_id"]
-                    ],
-                }
-            )
 
-    return docs.select("doc_id").mapInPandas(
-        build,
-        StructType(
-            [
-                StructField("asset_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
+def _wav_row(buf: bytes) -> tuple[int, ...]:
+    nch, rate, _bits, vals = _parse_wav(buf)
+    nf = len(vals) // nch
+    ch = np.arange(len(vals), dtype=np.int64) % nch
+    return (
+        nch,
+        rate,
+        nf,
+        nf * 1000 // rate,
+        int(vals.sum()),
+        int((vals * vals).sum()),
+        int(np.abs(vals).max(initial=0)),
+        int(vals[ch == 0].sum()),
+        int(vals[ch == 1].sum()),
     )
 
 
@@ -1184,29 +1087,9 @@ def wav_pcm_stats(assets: DataFrame) -> DataFrame:
     per-channel sums over the de-interleaved stream. All outputs are
     integer sums (never floored means), so engine division semantics
     on negative totals can't enter the parity surface. Same fused
-    narrow mapInPandas shape as the image decoders: NO exchange (r18: the trivial decode costs less than the r17 id-spread bought; scan splits parallelize it at scale), no payload shuffle,
-    linear scale-out."""
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in WAV_STATS_SCHEMA.fields}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                nch, rate, bits, vals = _parse_wav(bytes(payload))
-                nf = len(vals) // nch
-                ch = np.arange(len(vals), dtype=np.int64) % nch
-                out["asset_id"].append(aid)
-                out["n_channels"].append(nch)
-                out["sample_rate"].append(rate)
-                out["n_frames"].append(nf)
-                out["duration_ms"].append(nf * 1000 // rate)
-                out["sum_val"].append(int(vals.sum()))
-                out["sum_sq"].append(int((vals * vals).sum()))
-                out["peak_abs"].append(int(np.abs(vals).max(initial=0)))
-                out["ch0_sum"].append(int(vals[ch == 0].sum()))
-                out["ch1_sum"].append(int(vals[ch == 1].sum()))
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(stats, WAV_STATS_SCHEMA)
+    narrow mapInPandas shape as the image decoders: no exchange (see
+    :func:`_spread`), no payload shuffle, linear scale-out."""
+    return _per_asset(assets, WAV_STATS_SCHEMA, _wav_row)
 
 
 # ---------------------------------------------------------------------------
@@ -1363,26 +1246,15 @@ def synth_avi_assets(docs: DataFrame) -> DataFrame:
     """(asset_id, payload): deterministic RIFF/AVI per document — see
     _build_avi for the nested-LIST/JUNK layout and _avi_params/
     _avi_frame_px for the closed form the oracle recomputes."""
+    return _synth(docs.select("doc_id"), _build_avi)
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["doc_id"],
-                    "payload": [
-                        _build_avi(int(doc_id)) for doc_id in pdf["doc_id"]
-                    ],
-                }
-            )
 
-    return docs.select("doc_id").mapInPandas(
-        build,
-        StructType(
-            [
-                StructField("asset_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
+def _avi_row(buf: bytes) -> tuple[int, ...]:
+    w, h, nf, fps, frames = _parse_avi(buf)
+    sums = [int(f.astype(np.int64).sum()) for f in frames]
+    return (
+        w, h, nf, fps, nf * 1000 // fps,
+        sum(sums), sums[0], sums[-1], max(sums),
     )
 
 
@@ -1392,27 +1264,9 @@ def avi_frame_stats(assets: DataFrame) -> DataFrame:
     sums, and the max per-frame sum — all integer sums over decoded
     top-down RGB samples (the per-frame permutation must be undone for
     first/last/max to land on the right frames). Fused narrow
-    mapInPandas like every other decode operator: NO exchange (r18: the trivial decode costs less than the r17 id-spread bought; scan splits parallelize it at scale), no payload shuffle."""
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in AVI_FRAME_STATS_SCHEMA.fields}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, nf, fps, frames = _parse_avi(bytes(payload))
-                sums = [int(f.astype(np.int64).sum()) for f in frames]
-                out["asset_id"].append(aid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_frames"].append(nf)
-                out["fps"].append(fps)
-                out["duration_ms"].append(nf * 1000 // fps)
-                out["sum_px"].append(sum(sums))
-                out["first_frame_sum"].append(sums[0])
-                out["last_frame_sum"].append(sums[-1])
-                out["max_frame_sum"].append(max(sums))
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(stats, AVI_FRAME_STATS_SCHEMA)
+    mapInPandas like every other decode operator: no exchange (see
+    :func:`_spread`), no payload shuffle."""
+    return _per_asset(assets, AVI_FRAME_STATS_SCHEMA, _avi_row)
 
 
 # ---------------------------------------------------------------------------
@@ -1602,6 +1456,21 @@ def _parse_png(buf: bytes) -> tuple[int, int, np.ndarray]:
     return w, h, px.reshape(h, w, 3)
 
 
+def _png_payload(d: int) -> bytes:
+    w, h = 4 + d % 5, 2 + d % 4
+    px = (
+        ((d * 17 + np.arange(w * h * 3, dtype=np.int64)) % 256)
+        .astype(np.uint8)
+        .reshape(h, w, 3)
+    )
+    return _build_png(
+        w, h, px,
+        filters=[(d + y) % 5 for y in range(h)],
+        n_idat=2 if d % 3 == 0 else 1,
+        with_text=d % 4 == 0,
+    )
+
+
 def synth_png_assets(docs: DataFrame) -> DataFrame:
     """(asset_id, payload): deterministic 8-bit truecolor PNG per
     document. Logical image (top-down row-major RGB): sample i =
@@ -1609,70 +1478,20 @@ def synth_png_assets(docs: DataFrame) -> DataFrame:
     — row y is filtered with type (doc_id + y) % 5, so every corpus
     slice exercises all five filters; every 3rd asset splits its
     deflate stream over 2 IDAT chunks and every 4th plants an
-    ancillary tEXt chunk the walker must skip."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 4 + d % 5, 2 + d % 4
-                px = (
-                    ((d * 17 + np.arange(w * h * 3, dtype=np.int64)) % 256)
-                    .astype(np.uint8)
-                    .reshape(h, w, 3)
-                )
-                payloads.append(
-                    _build_png(
-                        w, h, px,
-                        filters=[(d + y) % 5 for y in range(h)],
-                        n_idat=2 if d % 3 == 0 else 1,
-                        with_text=d % 4 == 0,
-                    )
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    return _spread(docs.select("doc_id")).mapInPandas(
-        build,
-        StructType(
-            [
-                StructField("asset_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
+    ancillary tEXt chunk the walker must skip. Filtering and deflate
+    are decode-heavy, so the ids are spread first (:func:`_spread`)."""
+    return _synth(_spread(docs.select("doc_id")), _png_payload)
 
 
-def png_pixel_stats(assets: DataFrame, target: int = 2) -> DataFrame:
+def png_pixel_stats(assets: DataFrame) -> DataFrame:
     """Decode PNG payloads and report the same integer micro-unit stats
     as ppm/bmp_pixel_stats (full-image mean + per-channel means of the
-    ``target``x``target`` NN resize) over the decoded top-down RGB
-    image. Fused narrow mapInPandas: one id-only spread exchange (_spread), no payload shuffle, linear scale-out."""
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in PPM_PIXEL_SCHEMA.fields}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, px = _parse_png(bytes(payload))
-                ys = (np.arange(target) * h) // target
-                xs = (np.arange(target) * w) // target
-                resized = px[np.ix_(ys, xs)]
-                ch = resized.sum(axis=(0, 1))
-                n_rz = target * target
-                out["asset_id"].append(aid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mean_pixel_e4"].append(
-                    int(10_000 * px.sum()) // (w * h * 3)
-                )
-                out["r_mean_e4"].append(int(10_000 * ch[0]) // n_rz)
-                out["g_mean_e4"].append(int(10_000 * ch[1]) // n_rz)
-                out["b_mean_e4"].append(int(10_000 * ch[2]) // n_rz)
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(stats, PPM_PIXEL_SCHEMA)
+    ``RESIZE_TARGET``x``RESIZE_TARGET`` NN resize, :func:`_rgb_stats`)
+    over the decoded top-down RGB image. Fused narrow mapInPandas: no
+    payload shuffle, linear scale-out."""
+    return _per_asset(
+        assets, PPM_PIXEL_SCHEMA, lambda b: _rgb_stats(*_parse_png(b))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2272,38 +2091,25 @@ def _parse_jpeg_color(
     return w, h, rgb
 
 
+def _jpeg_gray_payload(d: int) -> bytes:
+    w, h = 8 * (1 + d % 3), 8 * (1 + d % 2)
+    nb = (w // 8) * (h // 8)
+    vals = (
+        (d * 19 + 7 * np.arange(nb, dtype=np.int64)) % 256
+    ).astype(np.uint8).reshape(h // 8, w // 8)
+    return _build_jpeg_gray(w, h, vals)
+
+
 def synth_jpeg_assets(docs: DataFrame) -> DataFrame:
     """(asset_id, payload): deterministic grayscale baseline JPEG per
     document. Blocks are CONSTANT — block (by, bx) of doc d has value
     (d*19 + (by*(w//8) + bx)*7) % 256 with w = 8·(1 + d % 3),
     h = 8·(1 + d % 2) — so quantization reduces to exact integer DC
     math and the decode has a closed form despite JPEG being lossy:
-    decoded block value = clip255(2·round_half_away((v−128)/2) + 128)."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 8 * (1 + d % 3), 8 * (1 + d % 2)
-                nb = (w // 8) * (h // 8)
-                vals = (
-                    (d * 19 + 7 * np.arange(nb, dtype=np.int64)) % 256
-                ).astype(np.uint8).reshape(h // 8, w // 8)
-                payloads.append(_build_jpeg_gray(w, h, vals))
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    return _spread(docs.select("doc_id")).mapInPandas(
-        build,
-        StructType(
-            [
-                StructField("asset_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
+    decoded block value = clip255(2·round_half_away((v−128)/2) + 128).
+    Huffman/DCT coding is decode-heavy, so the ids are spread first
+    (:func:`_spread`)."""
+    return _synth(_spread(docs.select("doc_id")), _jpeg_gray_payload)
 
 
 JPEG_STATS_SCHEMA = StructType(
@@ -2320,6 +2126,14 @@ JPEG_STATS_SCHEMA = StructType(
 )
 
 
+def _jpeg_gray_row(buf: bytes) -> tuple[int, ...]:
+    w, h, px = _parse_jpeg_gray(buf)
+    return (
+        w, h, int(px.sum()), int(px.min()), int(px.max()),
+        int(px[0, 0]), int(px[h - 1, w - 1]),
+    )
+
+
 def jpeg_pixel_stats(assets: DataFrame) -> DataFrame:
     """Decode grayscale baseline JPEG payloads through the full
     from-scratch path (Huffman → dequant → IDCT) and report exact
@@ -2328,23 +2142,26 @@ def jpeg_pixel_stats(assets: DataFrame) -> DataFrame:
     entropy-stream order — a DC-difference decoding bug shifts every
     later block and breaks them). Fused narrow mapInPandas: zero
     shuffles, linear scale-out."""
+    return _per_asset(assets, JPEG_STATS_SCHEMA, _jpeg_gray_row)
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in JPEG_STATS_SCHEMA.fields}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, px = _parse_jpeg_gray(bytes(payload))
-                out["asset_id"].append(aid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["sum_px"].append(int(px.sum()))
-                out["min_px"].append(int(px.min()))
-                out["max_px"].append(int(px.max()))
-                out["first_block_px"].append(int(px[0, 0]))
-                out["last_block_px"].append(int(px[h - 1, w - 1]))
-            yield pd.DataFrame(out)
 
-    return assets.mapInPandas(stats, JPEG_STATS_SCHEMA)
+def _jpeg_420_payload(d: int) -> bytes:
+    mw, mh = 1 + d % 2, 1 + d % 3
+    w, h = 16 * mw, 16 * mh
+    yb = np.zeros((2 * mh, 2 * mw), dtype=np.uint8)
+    cbb = np.zeros((mh, mw), dtype=np.uint8)
+    crb = np.zeros((mh, mw), dtype=np.uint8)
+    for myi in range(mh):
+        for mxi in range(mw):
+            m = myi * mw + mxi
+            for v in range(2):
+                for hb in range(2):
+                    yb[2 * myi + v, 2 * mxi + hb] = (
+                        d * 19 + 7 * (4 * m + 2 * v + hb)
+                    ) % 256
+            cbb[myi, mxi] = (d * 31 + 11 * m) % 256
+            crb[myi, mxi] = (d * 23 + 13 * m) % 256
+    return _build_jpeg_color(w, h, yb, cbb, crb)
 
 
 def synth_jpeg_color_assets(docs: DataFrame) -> DataFrame:
@@ -2355,42 +2172,25 @@ def synth_jpeg_color_assets(docs: DataFrame) -> DataFrame:
     (d·19 + 7i) % 256; MCU m's Cb block is (d·31 + 11m) % 256 and its
     Cr block (d·23 + 13m) % 256 — so all three lossy channels have the
     shared closed form 2·round_half_away((v−128)/2)+128 and the RGB
-    transform is exactly replayable (see jpeg_color_stats)."""
+    transform is exactly replayable (see jpeg_color_stats). The ids are
+    spread first (:func:`_spread`)."""
+    return _synth(_spread(docs.select("doc_id")), _jpeg_420_payload)
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                mw, mh = 1 + d % 2, 1 + d % 3
-                w, h = 16 * mw, 16 * mh
-                yb = np.zeros((2 * mh, 2 * mw), dtype=np.uint8)
-                cbb = np.zeros((mh, mw), dtype=np.uint8)
-                crb = np.zeros((mh, mw), dtype=np.uint8)
-                for myi in range(mh):
-                    for mxi in range(mw):
-                        m = myi * mw + mxi
-                        for v in range(2):
-                            for hb in range(2):
-                                yb[2 * myi + v, 2 * mxi + hb] = (
-                                    d * 19 + 7 * (4 * m + 2 * v + hb)
-                                ) % 256
-                        cbb[myi, mxi] = (d * 31 + 11 * m) % 256
-                        crb[myi, mxi] = (d * 23 + 13 * m) % 256
-                payloads.append(_build_jpeg_color(w, h, yb, cbb, crb))
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "payload": payloads}
-            )
 
-    return _spread(docs.select("doc_id")).mapInPandas(
-        build,
-        StructType(
-            [
-                StructField("asset_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
+def _jpeg_422_payload(d: int) -> bytes:
+    mw, mh = 1 + d % 2, 1 + d % 3
+    w, h = 16 * mw, 8 * mh
+    yb = np.zeros((mh, 2 * mw), dtype=np.uint8)
+    cbb = np.zeros((mh, mw), dtype=np.uint8)
+    crb = np.zeros((mh, mw), dtype=np.uint8)
+    for myi in range(mh):
+        for mxi in range(mw):
+            m = myi * mw + mxi
+            for hb in range(2):
+                yb[myi, 2 * mxi + hb] = (d * 19 + 7 * (2 * m + hb)) % 256
+            cbb[myi, mxi] = (d * 31 + 11 * m) % 256
+            crb[myi, mxi] = (d * 23 + 13 * m) % 256
+    return _build_jpeg_color(w, h, yb, cbb, crb, sampling=(2, 1))
 
 
 def synth_jpeg_422_assets(docs: DataFrame) -> DataFrame:
@@ -2400,43 +2200,9 @@ def synth_jpeg_422_assets(docs: DataFrame) -> DataFrame:
     raster within the MCU) is (d·19 + 7i) % 256; MCU m's Cb block is
     (d·31 + 11m) % 256 and its Cr block (d·23 + 13m) % 256 — the same
     per-channel closed form as the 4:2:0 synth over the non-square
-    MCU geometry (chroma replicates 2× horizontally only)."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                mw, mh = 1 + d % 2, 1 + d % 3
-                w, h = 16 * mw, 8 * mh
-                yb = np.zeros((mh, 2 * mw), dtype=np.uint8)
-                cbb = np.zeros((mh, mw), dtype=np.uint8)
-                crb = np.zeros((mh, mw), dtype=np.uint8)
-                for myi in range(mh):
-                    for mxi in range(mw):
-                        m = myi * mw + mxi
-                        for hb in range(2):
-                            yb[myi, 2 * mxi + hb] = (
-                                d * 19 + 7 * (2 * m + hb)
-                            ) % 256
-                        cbb[myi, mxi] = (d * 31 + 11 * m) % 256
-                        crb[myi, mxi] = (d * 23 + 13 * m) % 256
-                payloads.append(
-                    _build_jpeg_color(w, h, yb, cbb, crb, sampling=(2, 1))
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    return _spread(docs.select("doc_id")).mapInPandas(
-        build,
-        StructType(
-            [
-                StructField("asset_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
+    MCU geometry (chroma replicates 2× horizontally only). The ids are
+    spread first (:func:`_spread`)."""
+    return _synth(_spread(docs.select("doc_id")), _jpeg_422_payload)
 
 
 JPEG_COLOR_STATS_SCHEMA = StructType(
@@ -2459,6 +2225,17 @@ JPEG_COLOR_STATS_SCHEMA = StructType(
 )
 
 
+def _jpeg_color_row(buf: bytes) -> tuple[int, ...]:
+    w, h, rgb = _parse_jpeg_color(buf)
+    return (
+        w, h,
+        *(int(rgb[:, :, c].sum()) for c in range(3)),
+        int(rgb[:, :, 0].min()), int(rgb[:, :, 0].max()),
+        *(int(v) for v in rgb[0, 0]),
+        *(int(v) for v in rgb[h - 1, w - 1]),
+    )
+
+
 def jpeg_color_stats(assets: DataFrame) -> DataFrame:
     """Decode 4:2:0 color baseline JPEG payloads through the full
     from-scratch path (per-component Huffman/dequant, MCU-interleaved
@@ -2469,24 +2246,4 @@ def jpeg_color_stats(assets: DataFrame) -> DataFrame:
     chroma replication placement at once (a block mis-placement or a
     swapped Cb/Cr table moves them). Fused narrow mapInPandas: zero
     shuffles, linear scale-out."""
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in JPEG_COLOR_STATS_SCHEMA.fields}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, rgb = _parse_jpeg_color(bytes(payload))
-                out["asset_id"].append(aid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["sum_r"].append(int(rgb[:, :, 0].sum()))
-                out["sum_g"].append(int(rgb[:, :, 1].sum()))
-                out["sum_b"].append(int(rgb[:, :, 2].sum()))
-                out["min_r"].append(int(rgb[:, :, 0].min()))
-                out["max_r"].append(int(rgb[:, :, 0].max()))
-                for ch, nm in enumerate(("first_r", "first_g", "first_b")):
-                    out[nm].append(int(rgb[0, 0, ch]))
-                for ch, nm in enumerate(("last_r", "last_g", "last_b")):
-                    out[nm].append(int(rgb[h - 1, w - 1, ch]))
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(stats, JPEG_COLOR_STATS_SCHEMA)
+    return _per_asset(assets, JPEG_COLOR_STATS_SCHEMA, _jpeg_color_row)

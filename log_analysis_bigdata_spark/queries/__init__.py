@@ -64,62 +64,62 @@ _LOADED = False
 # round (tests/test_oracle_parity.py — every entry plus the flagship
 # entry()).
 # --- BEGIN DRIVER WINDOW (generated by tools/rotate_window.py) ---
-# Round-18 window: 11 forced (age cap / never-verdicted),
-# 18 code-change re-verdict pins, 21 oldest-first pre-fills.
+# Round-19 window: 21 forced (age cap / never-verdicted),
+# 20 code-change re-verdict pins, 9 oldest-first pre-fills.
 _DRIVER_WINDOW = (
-    # (1) forced: needing a r18 verdict (registry order)
-    "simhash_near_pairs",
-    "template_tag_docs",
-    "word_histogram_docs",
-    "topk_orders_by_price",
-    "window_topk_orders_per_customer",
-    "window_lag_event_gaps",
-    "string_funcs_customer",
-    "stats_agg_events",
-    "window_time_range_sum",
-    "tumbling_window_events",
-    "sliding_window_events",
+    # (1) forced: needing a r19 verdict (registry order)
+    "text_quality_docs",
+    "token_counts_docs",
+    "quality_filter_docs",
+    "simhash_text_docs",
+    "tokenizer_fertility_by_lang",
+    "source_cap_sample",
+    "sessionize_events",
+    "q6_forecast_revenue",
+    "q7_nation_volume",
+    "session_flow_top_transitions",
+    "retention_cohort_weeks",
+    "variant_props_stats",
+    "serving_by_key",
+    "serving_time_range",
+    "serving_high_score",
+    "serving_delete",
+    "stream_dedup_blocks",
+    "stream_topk_user_event_types",
+    "q8_market_share",
+    "q9_profit_by_nation",
+    "simhash_buckets",
     # (2) pinned re-verdicts: code changed this round
     "semdedup_embedding_cells",
-    "corpus_to_training_set",
-    "dedup_survivors_by_quality",
-    "dedup_pipeline_docs",
+    "kmeans_step_shift",
+    "ivf_topk",
+    "ivf_topk_nprobe",
+    "ivfpq_topk",
+    "ivfpq_knn_join",
+    "ivfpq_index_append",
+    "pagerank_supplier_graph",
+    "minhash_dup_pairs",
+    "simhash_dup_groups",
     "multimodal_ppm_pixel_stats",
     "multimodal_bmp_pixel_stats",
+    "multimodal_gif_pixel_stats",
+    "multimodal_png_pixel_stats",
+    "multimodal_jpeg_block_stats",
+    "multimodal_jpeg_color_stats",
+    "multimodal_jpeg_422_stats",
     "multimodal_wav_pcm_stats",
     "multimodal_avi_frame_stats",
     "image_near_dup_components",
-    "ivfpq_index_append",
-    "ivfpq_topk",
-    "ivfpq_knn_join",
-    "langid_ngram_predict",
-    "bigram_logprob_docs",
-    "pagerank_supplier_graph",
-    "simhash_near_components",
-    "dedup_components",
-    "dup_cluster_size_histogram",
     # (3) pre-fills: verdicts aging out soonest, alphabetical
-    "approx_percentile_value",
-    "asof_join_events_orders",
-    "asof_join_tolerance",
-    "bm25_search_docs",
-    "bpe_apply_merges",
-    "bpe_merge_candidates",
-    "bpe_train_merges",
-    "cdc_latest_state",
-    "embedding_dimension_stats",
-    "funnel_conversion_steps",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_parts_supplier_counts",
-    "q17_small_quantity_revenue",
-    "q18_large_orders",
-    "q19_discounted_revenue",
-    "q20_excess_share_suppliers",
-    "q21_final_shipper",
-    "q22_dormant_customers",
-    "q2_min_cost_supplier",
-    "q5_revenue_by_nation",
+    "ann_bucketed_topk",
+    "anti_join_docs_quarantine",
+    "attribution_revenue_touch",
+    "case_bucket_order_price",
+    "chunk_dedup_retention",
+    "chunk_documents",
+    "cogroup_user_activity",
+    "constant_columns_detect",
+    "distinct_count_segments",
 )
 # --- END DRIVER WINDOW ---
 

@@ -170,12 +170,13 @@ def multimodal_ppm_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes→numeric contract is ML_predict.py:109's float32 matrix build.
 
     Scale: synth + decode + resize are one fused narrow mapInPandas
-    chain — NO exchange (r18: the trivial decode costs less than the r17 id-spread bought; scan splits parallelize it at scale), no payload shuffle, linear scale-out; a real ingest would read
-    the payload column from parquet instead of synthesizing it."""
+    chain — no exchange (see multimodal.assets._spread), no payload
+    shuffle, linear scale-out; a real ingest would read the payload
+    column from parquet instead of synthesizing it."""
     from ..multimodal.assets import ppm_pixel_stats, synth_ppm_assets
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return ppm_pixel_stats(synth_ppm_assets(docs), target=2)
+    return ppm_pixel_stats(synth_ppm_assets(docs))
 
 
 @register(
@@ -237,7 +238,7 @@ def multimodal_bmp_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..multimodal.assets import bmp_pixel_stats, synth_bmp_assets
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return bmp_pixel_stats(synth_bmp_assets(docs), target=2)
+    return bmp_pixel_stats(synth_bmp_assets(docs))
 
 
 @register(
@@ -305,13 +306,14 @@ def multimodal_gif_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed form — a decoder that mishandles ANY LZW mechanism (width
     bump timing, KwKwK, sub-block reassembly), the palette, or the
     4-pass interlace breaks the hash. Same fused narrow mapInPandas
-    chain as the PPM/BMP twins: one id-only spread exchange (_spread), no payload shuffle, linear scale-out.
+    chain as the PPM/BMP twins: one id-only spread exchange (see
+    multimodal.assets._spread), no payload shuffle, linear scale-out.
     Codec unit-tested in tests/test_multimodal.py (roundtrip property
     incl. table-overflow clear-reset)."""
     from ..multimodal.assets import gif_pixel_stats, synth_gif_assets
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return gif_pixel_stats(synth_gif_assets(docs), target=2)
+    return gif_pixel_stats(synth_gif_assets(docs))
 
 
 @register(
@@ -377,13 +379,14 @@ def multimodal_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     any filter's byte-predictor (left/up/average-floor/Paeth
     tie-break), the IDAT concatenation, or the per-row filter tag
     breaks the hash. Same fused narrow mapInPandas chain as the
-    PPM/BMP/GIF siblings: one id-only spread exchange (_spread), no payload shuffle, linear scale-out. Codec
-    unit-tested in tests/test_multimodal.py (all-variant roundtrip +
+    PPM/BMP/GIF siblings: one id-only spread exchange (see
+    multimodal.assets._spread), no payload shuffle, linear scale-out.
+    Codec unit-tested in tests/test_multimodal.py (all-variant roundtrip +
     hostile/truncation matrix)."""
     from ..multimodal.assets import png_pixel_stats, synth_png_assets
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return png_pixel_stats(synth_png_assets(docs), target=2)
+    return png_pixel_stats(synth_png_assets(docs))
 
 
 # decoded constant-block value: 2*round_half_away((v-128)/2) + 128,
@@ -451,7 +454,8 @@ def multimodal_jpeg_block_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     The general AC/ZRL/negative-amplitude path is pinned in
     tests/test_multimodal.py against an independent double-loop IDCT.
     Color/4:2:0 decode is multimodal_jpeg_color_stats (r17). Fused
-    narrow mapInPandas: one id-only spread exchange (_spread), no payload shuffle, linear scale-out."""
+    narrow mapInPandas: one id-only spread exchange (see
+    multimodal.assets._spread), no payload shuffle, linear scale-out."""
     from ..multimodal.assets import jpeg_pixel_stats, synth_jpeg_assets
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -557,7 +561,8 @@ def multimodal_jpeg_color_stats(
     and the RGB transform uses floor(x+0.5) so the SAME double
     expressions run in DuckDB. first/last pixels pin MCU geometry and
     Cb/Cr table wiring (a swapped table or mis-placed block moves
-    them). Fused narrow mapInPandas: one id-only spread exchange (_spread), no payload shuffle, linear scale-out.
+    them). Fused narrow mapInPandas: one id-only spread exchange (see
+    multimodal.assets._spread), no payload shuffle, linear scale-out.
 
     Beyond-reference (LLM multimodal brief); the decode_image_stub env
     gate now covers only progressive/exotic-sampling photographic
@@ -629,7 +634,8 @@ def multimodal_jpeg_422_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     same from-scratch path and the same per-channel closed form —
     shares jpeg_color_stats with the 4:2:0 entry. With this layout the
     decode_image_stub env gate is progressive-scan only. Fused narrow
-    mapInPandas: one id-only spread exchange (_spread), no payload shuffle, linear scale-out."""
+    mapInPandas: one id-only spread exchange (see
+    multimodal.assets._spread), no payload shuffle, linear scale-out."""
     from ..multimodal.assets import jpeg_color_stats, synth_jpeg_422_assets
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -696,9 +702,10 @@ def multimodal_wav_pcm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     channel interleave breaks the hash. All outputs are integer SUMS
     (never floored means), keeping negative-division semantics out of
     the parity surface. Same fused narrow mapInPandas chain as the
-    PPM/BMP/GIF image twins: NO exchange (r18: the trivial decode costs less than the r17 id-spread bought; scan splits parallelize it at scale), no payload shuffle, linear scale-out. Codec
-    unit-tested in tests/test_multimodal.py (roundtrip, junk-chunk
-    walking, pad alignment, loud non-PCM failure)."""
+    PPM/BMP/GIF image twins: no exchange (see multimodal.assets._spread),
+    no payload shuffle, linear scale-out. Codec unit-tested in
+    tests/test_multimodal.py (roundtrip, junk-chunk walking, pad
+    alignment, loud non-PCM failure)."""
     from ..multimodal.assets import synth_wav_assets, wav_pcm_stats
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from log_analysis_bigdata_spark.catalog import load_table
@@ -190,11 +191,33 @@ def test_stratified_split_partitions_df(spark):
     assert train.join(test, "vec_id").count() == 0
 
 
+def _jobs_run(spark, group, action):
+    """(number of Spark jobs ``action()`` runs, its result), the jobs
+    counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), result
+
+
 def test_balanced_class_weights_sum(spark):
     emb = load_table(spark, SF_SMOKE, "embeddings").select(
         "vec_id", (F.col("label") % 2).cast("double").alias("label_index")
     )
-    w = balanced_class_weights(emb, "label_index")
+    # N and K come from one action: as many jobs as a single
+    # groupBy-count collect of the same frame (two actions ran 6 vs 2)
+    one_collect, _ = _jobs_run(
+        spark, "bcw-collect", lambda: emb.groupBy("label_index").count().collect()
+    )
+    jobs, w = _jobs_run(
+        spark, "bcw-weights", lambda: balanced_class_weights(emb, "label_index")
+    )
+    assert jobs == one_collect
     # per-class: n * (N / (K*n)) = N/K → both classes contribute equally
     sums = {
         r["label_index"]: r["s"]
@@ -202,6 +225,14 @@ def test_balanced_class_weights_sum(spark):
     }
     vals = list(sums.values())
     assert abs(vals[0] - vals[1]) < 1e-6
+
+
+def test_balanced_class_weights_empty_raises(spark):
+    emb = load_table(spark, SF_SMOKE, "embeddings").select(
+        "vec_id", (F.col("label") % 2).cast("double").alias("label_index")
+    )
+    with pytest.raises(ValueError, match="empty training set"):
+        balanced_class_weights(emb.limit(0), "label_index")
 
 
 def test_lr_learns_separable_target(spark):

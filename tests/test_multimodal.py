@@ -144,7 +144,7 @@ def test_ppm_pixel_stats_hand_computed(spark):
     raster = bytes(range(12))
     buf = b"P6\n2 2\n255\n" + raster
     df = spark.createDataFrame([(1, buf)], ["asset_id", "payload"])
-    row = ppm_pixel_stats(df, target=2).collect()[0]
+    row = ppm_pixel_stats(df).collect()[0]
     assert (row["width"], row["height"]) == (2, 2)
     # full mean = mean(0..11) = 5.5 -> 55000 micro-units
     assert row["mean_pixel_e4"] == 55_000
@@ -189,10 +189,54 @@ def test_ppm_pixel_stats_trailing_bytes_not_shifted(spark):
     df = spark.createDataFrame(
         [(1, clean), (2, padded)], ["asset_id", "payload"]
     )
-    rows = {r["asset_id"]: r for r in ppm_pixel_stats(df, target=2).collect()}
+    rows = {r["asset_id"]: r for r in ppm_pixel_stats(df).collect()}
     for c in ("mean_pixel_e4", "r_mean_e4", "g_mean_e4", "b_mean_e4"):
         assert rows[1][c] == rows[2][c]
     assert rows[2]["mean_pixel_e4"] == 55_000
+
+
+def test_pixel_stats_agree_across_containers(spark):
+    """One random palette image serialized as PPM, BMP (both row orders),
+    PNG (each of the five filters on every row) and GIF (interlaced and
+    not): all four *_pixel_stats decoders return the same row, and it
+    equals a numpy replica of the full-image mean plus the 2x2
+    nearest-neighbour channel means the oracles hard-code."""
+    from log_analysis_bigdata_spark.multimodal.assets import (
+        _build_bmp,
+        _build_gif,
+        _build_png,
+        _gif_palette,
+        bmp_pixel_stats,
+        gif_pixel_stats,
+        png_pixel_stats,
+        ppm_pixel_stats,
+    )
+
+    h, w = 11, 6  # BMP rows of 18 bytes pad to 20
+    idx = np.random.default_rng(9).integers(0, 256, (h, w), dtype=np.uint8)
+    px = _gif_palette()[idx]
+    payloads = {
+        ppm_pixel_stats: [b"P6\n%d %d\n255\n" % (w, h) + px.tobytes()],
+        bmp_pixel_stats: [_build_bmp(w, h, px, top_down=t) for t in (0, 1)],
+        png_pixel_stats: [_build_png(w, h, px, [f] * h) for f in range(5)],
+        gif_pixel_stats: [_build_gif(w, h, idx, interlaced=i) for i in (0, 1)],
+    }
+    full = px.astype(np.int64)
+    nn = [full[(y * h) // 2, (x * w) // 2] for y in range(2) for x in range(2)]
+    want = (
+        w,
+        h,
+        10_000 * int(full.sum()) // (w * h * 3),
+        *(10_000 * int(sum(p[c] for p in nn)) // 4 for c in range(3)),
+    )
+    cols = ("width", "height", "mean_pixel_e4", "r_mean_e4", "g_mean_e4",
+            "b_mean_e4")
+    for op, bufs in payloads.items():
+        df = spark.createDataFrame(list(enumerate(bufs)), ["asset_id", "payload"])
+        rows = op(df).collect()
+        assert len(rows) == len(bufs)
+        for r in rows:
+            assert tuple(r[c] for c in cols) == want, (op.__name__, r)
 
 
 def test_bmp_build_parse_roundtrip_both_row_orders():
@@ -335,7 +379,7 @@ def test_synth_gif_decode_matches_formula(spark):
     )
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").limit(23)
-    rows = gif_pixel_stats(synth_gif_assets(docs), target=2).collect()
+    rows = gif_pixel_stats(synth_gif_assets(docs)).collect()
     assert len(rows) == 23
     pal = _gif_palette().astype(np.int64)
     for r in rows:
