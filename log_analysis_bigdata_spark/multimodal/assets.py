@@ -323,7 +323,7 @@ def _parse_ppm(buf: bytes) -> tuple[int, int, int, float]:
     (ASCII tokens, ``#`` comments allowed) + one whitespace byte + raw
     interleaved RGB. Returns (width, height, channels, mean_pixel)."""
     w, h, px = _ppm_pixels(buf)
-    return w, h, 3, (float(px.mean()) if px.size else 0.0)
+    return w, h, 3, float(px.mean())
 
 
 def _ppm_pixels(buf: bytes) -> tuple[int, int, np.ndarray]:
@@ -356,6 +356,9 @@ def _ppm_pixels(buf: bytes) -> tuple[int, int, np.ndarray]:
         # maxval > 255 means 2 bytes/sample — reading the raster as
         # uint8 would silently produce garbage stats, so fail loudly
         raise ValueError(f"only 8-bit P6 supported (maxval {maxval})")
+    if w == 0 or h == 0:
+        # an empty raster has no pixel mean: _rgb_stats would IndexError
+        raise ValueError("zero-dimension PPM")
     pos += 1  # exactly one whitespace byte separates header from raster
     n = w * h * 3
     if len(buf) < pos + n:
@@ -496,6 +499,8 @@ def _parse_bmp(buf: bytes) -> tuple[int, int, np.ndarray]:
         )
     top_down = h_raw < 0  # negative height = rows stored top-down
     h = -h_raw if top_down else h_raw
+    if w <= 0 or h == 0:
+        raise ValueError(f"zero-dimension BMP ({w} x {h_raw})")
     stride = ((w * 3 + 3) // 4) * 4  # rows pad to 4-byte boundaries
     if len(buf) < data_off + stride * h:
         raise ValueError("truncated BMP raster")
@@ -759,6 +764,8 @@ def _parse_gif(buf: bytes) -> tuple[int, int, np.ndarray]:
         raise ValueError("local color tables not supported")
     if (left, top, w, h) != (0, 0, sw, sh):
         raise ValueError("sub-rectangle images not supported")
+    if w == 0 or h == 0:
+        raise ValueError("zero-dimension GIF")
     mcs = buf[pos]
     pos += 1
     lzw = bytearray()
@@ -1032,6 +1039,11 @@ def _parse_wav(buf: bytes) -> tuple[int, int, int, np.ndarray]:
                 raise ValueError(
                     f"only uncompressed 8/16-bit PCM supported "
                     f"(format {tag}, bits {bits})"
+                )
+            if nch == 0 or rate == 0:
+                # _wav_row divides by both
+                raise ValueError(
+                    f"degenerate PCM format ({nch} channels, {rate} Hz)"
                 )
             fmt = (nch, rate, bits)
         elif cid == b"data":

@@ -110,10 +110,9 @@ def connected_components(
     ``distinct_pairs=True`` asserts the input is already a distinct
     ``src <= dst`` pair set — no duplicate symmetric edges, self-loops
     allowed (every dedup candidate generator ends in exactly that
-    distinct; simhash clustering also unions rep self-loops for n≥2
-    signature groups, ADVICE r7) — letting the symmetrization skip its
-    safety ``distinct()``: one full edge-set shuffle, the largest
-    fixed cost of the whole operator on big graphs. Symmetrization
+    distinct) — letting the symmetrization skip its safety
+    ``distinct()``: one full edge-set shuffle, the largest fixed cost
+    of the whole operator on big graphs. Symmetrization
     duplicates each self-loop; both solve paths are insensitive to
     duplicate edges and loops (union-find unions are idempotent; the
     propagation min is duplicate-blind), so keep that tolerance if

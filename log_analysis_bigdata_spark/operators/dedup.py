@@ -33,7 +33,7 @@ docs to exact dedup instead.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import (
@@ -109,9 +109,8 @@ def candidate_pairs(bands: DataFrame) -> DataFrame:
     BUCKET, and m byte-identical docs share every band digest — a
     2 500-member exact class measured 1 250× candidate inflation.
     Callers whose OUTPUT is cluster-level must collapse exact classes
-    first and feed representatives only (see minhash_dedup_pipeline's
-    star construction); callers that genuinely list pairs
-    (minhash_dup_pairs) have inherently quadratic output on such
+    first and feed representatives only (exact_class_collapse);
+    callers that genuinely list pairs (minhash_dup_pairs) have inherently quadratic output on such
     input, which no plan can avoid — the probe's dup-class tile pins
     the pipeline path."""
     long = band_long(bands)
@@ -146,39 +145,71 @@ def verify_jaccard(cand: DataFrame, sh: DataFrame) -> DataFrame:
     ).select("doc_a", "doc_b")
 
 
+# second seed of the class-key pair (the first is xxhash64's default)
+CLASS_KEY_SEED = -7046029254386353131
+
+
+def exact_class_collapse(
+    site: str, df: DataFrame, id_col: str, key: Column
+) -> tuple[DataFrame, DataFrame]:
+    """(reps, star): one representative per exact class of ``df`` (rows
+    with equal ``key``), for a near-dup join to see instead of the class.
+
+    An LSH self-join is quadratic in a BUCKET, and m identical rows
+    share every band: one 2 500-member class turned 2.5k natural
+    candidates into 3.13M (r16, sf1; a 100 TB boilerplate class of 10⁶
+    docs would be 5·10¹¹ pairs). An exact class is a verified clique, so
+    an (m−1)-edge star to its min id reproduces its connectivity, and
+    any member's near-dup edge is its rep's edge: components over
+    (rep-level edges ∪ star) equal components over the member-level
+    edges.
+
+    The class key is an xxhash64 PAIR over ``key`` (default seed and
+    ``CLASS_KEY_SEED``): 16 bytes on the wire instead of a KB-scale
+    array, and only ``(ck1, ck2, id)`` rides the class groupBy. A
+    cross-class collision needs both hashes to agree (~2^-128 per class
+    pair), the collision class verify_jaccard already accepts.
+
+    ``reps`` is ``df`` restricted to each class's min ``id_col`` row;
+    ``star`` is ``(rep, id_col)`` for every other member. Both read the
+    ``bounded_persist``-ed keyed table and rep join (sites
+    ``<site>.keyed`` / ``<site>.with_rep``): the corpus-wide exchange
+    runs once, and at most one cached copy per site outlives a call."""
+    from ..session import bounded_persist
+
+    keyed = bounded_persist(
+        f"{site}.keyed",
+        df.select(
+            "*",
+            F.xxhash64(key).alias("ck1"),
+            F.xxhash64(key, F.lit(CLASS_KEY_SEED)).alias("ck2"),
+        ),
+    )
+    classes = keyed.select("ck1", "ck2", id_col).groupBy("ck1", "ck2").agg(
+        F.min(id_col).alias("rep")
+    )
+    with_rep = bounded_persist(
+        f"{site}.with_rep", keyed.join(classes, ["ck1", "ck2"])
+    )
+    star = with_rep.filter(F.col(id_col) != F.col("rep")).select("rep", id_col)
+    reps = with_rep.filter(F.col(id_col) == F.col("rep")).select(*df.columns)
+    return reps, star
+
+
 def minhash_dedup_pipeline(corpus: DataFrame) -> DataFrame:
     """corpus(doc_id, text) -> (keep_doc_id, n_members, max_doc_id):
     one row per near-dup cluster; keep_doc_id = the component's min
     doc_id (the canonical document a dedup pass retains), n_members
     counts how many documents collapse into it.
 
-    EXACT-CLASS COLLAPSE (r16 — the dup-class skew probe's find; key
-    reworked r17): the LSH self-join is quadratic in a BUCKET, and m
-    byte-identical docs share every band digest — a single
-    2 500-member exact class turned 2.5k natural candidates into 3.13M
-    (measured at sf1; a realistic 100 TB boilerplate class of 10⁶ docs
-    would be 5·10¹¹ pairs — job death). So docs are first grouped into
-    SHINGLE-SET-equality classes: every downstream stage is set-based
-    (minhash_component is an array_min — order/multiplicity
-    insensitive; band digests derive from it; verify_jaccard
-    array_distincts), so set-equal docs are guaranteed identical band
-    digests and Jaccard exactly 1 — a verified clique — which an
-    (m−1)-edge star to the class's min doc id reproduces with
-    identical connectivity. (r16 keyed on the raw ``hs`` array, which
-    missed reordered/repeated boilerplate whose shingle MULTISET
-    differs but whose set is equal — ADVICE r16 — and shipped the
-    whole array through two exchanges as the shuffle key.) The class
-    key is now a fixed-width xxhash64 PAIR over
-    array_sort(array_distinct(hs)) — 16 bytes on the wire instead of
-    the KB-scale array; a cross-class double collision needs both
-    64-bit hashes to agree (~2^-128 per class pair), the same accepted
-    collision class as verify_jaccard's 60-bit base hashes. Only one
+    Docs are first collapsed by SHINGLE-SET equality
+    (:func:`exact_class_collapse` over array_sort(array_distinct(hs))):
+    every downstream stage is set-based (minhash_component is an
+    array_min; band digests derive from it; verify_jaccard
+    array_distincts), so set-equal docs — reordered or repeated
+    boilerplate included — are one verified clique. Only one
     representative per class enters banding/verify, so collisions in a
-    bucket are once again genuine near-dup candidates, not copies.
-    Output is unchanged by construction: star ∪ rep-level verified
-    edges spans exactly the node set and components the clique ∪
-    member-level edges did (any member's near-dup edge is its rep's
-    edge — same shingle set).
+    bucket are genuine near-dup candidates, not copies.
     """
     # spread the shingle+digest stage across all cores first: a small
     # corpus parquet arrives as 1-2 input splits, which would serialize
@@ -188,50 +219,25 @@ def minhash_dedup_pipeline(corpus: DataFrame) -> DataFrame:
     corpus = corpus.repartition(
         corpus.sparkSession.sparkContext.defaultParallelism
     )
-    sd = F.array_sort(F.array_distinct("hs"))
-    sh_all = (
-        shingle_sets(corpus)
-        .withColumn("ck1", F.xxhash64(sd))
-        .withColumn("ck2", F.xxhash64(sd, F.lit(-7046029254386353131)))
-        .persist()
-    )  # hashed shingles + 16-byte set-class key, all docs
-    # (the persist is ALSO the materialization boundary that keeps the
-    # md5 base hash single-pass — see functions.text docstring)
-    # set-equality classes: one groupBy on the digest pair (map-side
-    # combinable after the repartition spreads the digest pass; only
-    # (ck1, ck2, doc_id) ride this exchange — the arrays stay put);
-    # reps carry their class forward, members contribute one star edge
-    classes = sh_all.select("ck1", "ck2", "doc_id").groupBy(
-        "ck1", "ck2"
-    ).agg(
-        F.min("doc_id").alias("rep"),
-        F.count(F.lit(1)).alias("class_n"),
-    )
-    with_rep = sh_all.join(classes, ["ck1", "ck2"]).persist()
-    star = with_rep.filter(F.col("doc_id") != F.col("rep")).select(
-        F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b")
-    )
-    sh = with_rep.filter(F.col("doc_id") == F.col("rep")).select(
-        "doc_id", "hs"
+    # the collapse's persisted keyed table is ALSO the materialization
+    # boundary that keeps the md5 base hash single-pass (see
+    # functions.text docstring)
+    sh, star = exact_class_collapse(
+        "dedup.minhash_dedup_pipeline",
+        shingle_sets(corpus),
+        "doc_id",
+        F.array_sort(F.array_distinct("hs")),
     )
     ver = verify_jaccard(candidate_pairs(band_digests(sh)), sh)
     comp = connected_components(
-        ver.unionByName(star), src="doc_a", dst="doc_b",
-        distinct_pairs=True,
+        ver.union(star), src="doc_a", dst="doc_b", distinct_pairs=True
     )
-    # comp is localCheckpoint-materialized inside connected_components,
-    # so the returned frame no longer reads the shingle caches — release
-    # them now instead of leaking cached copies per invocation into the
-    # session-lifetime cache manager (bench runs each entry 3x)
-    sh_all.unpersist(blocking=False)
-    with_rep.unpersist(blocking=False)
-    out = comp.groupBy("component").agg(
+    return comp.groupBy("component").agg(
         F.count(F.lit(1)).alias("n_members"),
         F.max("node").alias("max_doc_id"),
     ).select(
         F.col("component").alias("keep_doc_id"), "n_members", "max_doc_id"
     )
-    return out
 
 
 def incremental_verified_matches(

@@ -65,7 +65,7 @@ _LOADED = False
 # entry()).
 # --- BEGIN DRIVER WINDOW (generated by tools/rotate_window.py) ---
 # Round-19 window: 21 forced (age cap / never-verdicted),
-# 20 code-change re-verdict pins, 9 oldest-first pre-fills.
+# 25 code-change re-verdict pins, 4 oldest-first pre-fills.
 _DRIVER_WINDOW = (
     # (1) forced: needing a r19 verdict (registry order)
     "text_quality_docs",
@@ -110,16 +110,16 @@ _DRIVER_WINDOW = (
     "multimodal_wav_pcm_stats",
     "multimodal_avi_frame_stats",
     "image_near_dup_components",
+    "simhash_near_components",
+    "simhash_near_pairs",
+    "dedup_pipeline_docs",
+    "dedup_components",
+    "dup_cluster_size_histogram",
     # (3) pre-fills: verdicts aging out soonest, alphabetical
     "ann_bucketed_topk",
     "anti_join_docs_quarantine",
     "attribution_revenue_touch",
     "case_bucket_order_price",
-    "chunk_dedup_retention",
-    "chunk_documents",
-    "cogroup_user_activity",
-    "constant_columns_detect",
-    "distinct_count_segments",
 )
 # --- END DRIVER WINDOW ---
 

@@ -967,49 +967,17 @@ def image_near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle; 8 bytes out per image), then everything downstream runs on
     the signature quotient — the groupBy is the only corpus-keyed
     shuffle, banding/verify/components touch rep rows only, and labels
-    re-expand through the signature→rep map exactly as
-    simhash_near_components does. At 100 TB the signature column is a
+    re-expand through the signature→rep map — the one signature-quotient
+    clustering shape simhash_near_components shares
+    (textq._signature_components). At 100 TB the signature column is a
     persisted index; pixels are read once, ever."""
     from ..multimodal.assets import ppm_dhash, synth_ppm_dup_assets
-    from ..operators.components import connected_components
-    from .textq import _near_cand_pairs
+    from .textq import _signature_components
 
-    from pyspark.sql import Observation
+    def bands_for(n_reps: int) -> tuple[int, int, int]:
+        hmax = img_max_hamming(n_reps)
+        return hmax, 60 // (hmax + 1), hmax + 1
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     sig = ppm_dhash(synth_ppm_dup_assets(docs)).localCheckpoint(eager=True)
-    # the rep count (the hamming-tier input) rides the checkpoint job
-    # via Observation instead of a separate count() — one barrier job
-    # fewer per invocation (r18, guide §1.2; the pagerank/CC pattern)
-    gobs = Observation()
-    groups = (
-        sig.groupBy("simhash")
-        .agg(F.min("doc_id").alias("rep"), F.count(F.lit(1)).alias("n"))
-        .observe(gobs, F.count(F.lit(1)).alias("n_reps"))
-        .localCheckpoint(eager=True)
-    )
-    hmax = img_max_hamming(int(gobs.get["n_reps"] or 0))
-    rep_pairs = _near_cand_pairs(
-        groups.select(F.col("rep").alias("doc_id"), "simhash"),
-        max_hamming=hmax,
-        band_bits=60 // (hmax + 1),
-        n_bands=hmax + 1,
-    ).select("doc_a", "doc_b")
-    # the solver sees CROSS-rep edges only: n>=2 exact-dup groups whose
-    # rep has no near neighbor don't need a closure — their component
-    # IS the rep, assigned in the expansion below. (Feeding them as
-    # self-loop edges inflated the sf1 edge set past the local
-    # union-find cap into the distributed loop for zero information —
-    # the 285 s diagnosis above.)
-    rep_labels = connected_components(
-        rep_pairs, src="doc_a", dst="doc_b", distinct_pairs=True
-    )
-    return (
-        sig.join(groups.select("simhash", "rep", "n"), "simhash")
-        .join(rep_labels, F.col("rep") == F.col("node"), "left")
-        .filter(F.col("component").isNotNull() | (F.col("n") >= 2))
-        .select(
-            F.col("doc_id").alias("node"),
-            F.coalesce("component", F.col("rep")).alias("component"),
-        )
-    )
+    return _signature_components(sig, bands_for)

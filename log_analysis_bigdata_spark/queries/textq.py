@@ -17,7 +17,7 @@ runs on the tiny candidate set.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
@@ -1920,28 +1920,26 @@ def _near_sig_spark(corpus: DataFrame) -> DataFrame:
 def _near_cand_pairs(
     sig: DataFrame,
     max_hamming: int,
-    band_bits: int | None = None,
+    band_bits: int,
     n_bands: int = NEAR_BANDS,
 ) -> DataFrame:
-    """Banded candidate generation + hamming verify: 4 bands whose
-    width adapts to the input size (near_band_bits; a fixed 8-bit band
-    is 256 buckets forever — O(N²/256) candidates at scale), per-band
-    equi-self-join, bit_count(XOR) filter BEFORE the pair distinct
-    (hamming is a function of the pair's signatures, so the distinct
-    set is identical either way — filtering first shrinks the
-    distinct's shuffle to the true near-pairs instead of every band
-    collision). Width never changes RESULTS — pigeonhole recall for
-    hamming <= n_bands - 1 holds at any width and the verify is exact —
-    so the oracle's static-width split stays equivalent. ``n_bands``
-    defaults to the 4-band text-simhash split; the image dHash path
-    (round 12) passes 5 bands × 12 bits so hamming <= 4 keeps exact
-    banded recall. Caller must keep n_bands × band_bits <= NEAR_BITS —
-    a band shifted past the top bit reads all-zeros and buckets
+    """Banded candidate generation + hamming verify: ``n_bands`` bands
+    of ``band_bits`` each, per-band equi-self-join, bit_count(XOR)
+    filter BEFORE the pair distinct (hamming is a function of the
+    pair's signatures, so the distinct set is identical either way —
+    filtering first shrinks the distinct's shuffle to the true
+    near-pairs instead of every band collision). Callers derive the
+    width from a row count they already observe (near_band_bits for
+    the 4-band text simhash: a fixed 8-bit band is 256 buckets forever
+    — O(N²/256) candidates at scale; the image dHash path derives
+    hmax+1 bands of 60 // (hmax+1) bits). Width never changes RESULTS
+    — pigeonhole recall for hamming <= n_bands - 1 holds at any width
+    and the verify is exact — so the oracle's static-width split stays
+    equivalent. Caller must keep n_bands × band_bits <= NEAR_BITS — a
+    band shifted past the top bit reads all-zeros and buckets
     EVERYTHING together (guarded below). Returns
     (doc_a, doc_b, hamming:int), doc_a < doc_b. ``sig`` should be
-    materialized (the count + two join sides read it)."""
-    if band_bits is None:
-        band_bits = near_band_bits(sig.count())
+    materialized: both join sides read it."""
     if n_bands * band_bits > NEAR_BITS:
         raise ValueError(
             f"{n_bands} bands x {band_bits} bits exceed the "
@@ -1971,6 +1969,55 @@ def _near_cand_pairs(
             hamming.cast("int").alias("hamming"),
         )
         .distinct()
+    )
+
+
+def _signature_components(sig: DataFrame, bands_for) -> DataFrame:
+    """(node, component) near-dup clusters over a materialized
+    ``sig(doc_id, simhash)``, computed on the signature quotient:
+
+    1. identical signatures collapse to one rep (min doc_id) in one
+       groupBy — the hamming-0 bulk, and exactly the skew that makes
+       band buckets quadratic; the rep count rides that checkpoint job
+       as an Observation;
+    2. ``_near_cand_pairs(reps, *bands_for(n_reps))`` bands and
+       verifies distinct signatures only (``bands_for`` maps the rep
+       count to ``(max_hamming, band_bits, n_bands)``);
+    3. connected components run on the cross-rep edges only;
+    4. labels re-expand to documents by a left join: an n ≥ 2 group
+       with no edge is its own component, labelled by its rep, and an
+       edgeless singleton is dropped.
+
+    Exact, not an approximation: hamming is a function of the signature
+    pair, so a cross-group doc edge exists iff its rep edge does, and
+    an n ≥ 2 group is connected at hamming 0. Feeding such groups to
+    the solver as rep self-loops adds only edges — at sf1 image scale
+    they pushed the edge set past the local union-find cap into the
+    distributed loop (queries/multimodalq.py's 285 s diagnosis)."""
+    from ..operators.components import connected_components
+
+    gobs = Observation()
+    groups = (
+        sig.groupBy("simhash")
+        .agg(F.min("doc_id").alias("rep"), F.count(F.lit(1)).alias("n"))
+        .observe(gobs, F.count(F.lit(1)).alias("n_reps"))
+        .localCheckpoint(eager=True)
+    )
+    rep_pairs = _near_cand_pairs(
+        groups.select(F.col("rep").alias("doc_id"), "simhash"),
+        *bands_for(gobs.get["n_reps"]),
+    ).select("doc_a", "doc_b")
+    rep_labels = connected_components(
+        rep_pairs, src="doc_a", dst="doc_b", distinct_pairs=True
+    )
+    return (
+        sig.join(groups.select("simhash", "rep", "n"), "simhash")
+        .join(rep_labels, F.col("rep") == F.col("node"), "left")
+        .filter(F.col("component").isNotNull() | (F.col("n") >= 2))
+        .select(
+            F.col("doc_id").alias("node"),
+            F.coalesce("component", F.col("rep")).alias("component"),
+        )
     )
 
 
@@ -2016,8 +2063,14 @@ def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_hamming + 1 of them).
     """
     corpus = _dup_corpus_spark(spark, sf_dir)
-    sig = _near_sig_spark(corpus).localCheckpoint(eager=True)
-    return _near_cand_pairs(sig, max_hamming=3)
+    # the band width's row count rides the checkpoint job
+    obs = Observation()
+    sig = (
+        _near_sig_spark(corpus)
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    return _near_cand_pairs(sig, 3, near_band_bits(obs.get["n"]))
 
 
 @register(
@@ -2070,51 +2123,17 @@ def simhash_near_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     drifts k·3 bits), so the edge set for clustering is kept strict
     while pair REPORTING (simhash_near_pairs) stays at ≤ 3.
 
-    Scale (round 7): documents are COLLAPSED BY IDENTICAL SIGNATURE
-    before any pairing — hamming-0 duplicates (the bulk of a duplicated
-    corpus, and exactly the skew that makes band buckets quadratic) cost
-    one groupBy; banded candidate generation, hamming verify, and the
-    components solve then run on DISTINCT signatures only, and labels
-    re-expand to documents through the signature→rep map. This is
-    semantics-preserving, not an approximation: hamming is a function
-    of the signature pair, so every cross-group doc edge exists iff the
-    rep edge exists, and an n≥2 group is internally connected (hamming
-    0) — rendered as a rep self-loop. Measured at sf0.1: 1.9M doc pairs
-    → a few hundred rep pairs; 7.2 s → ~2 s. Banded generation stays
-    never-all-pairs; the verify runs before the pair distinct; the
-    components operator picks its local-vs-distributed path by edge
-    count (operators/components.py); running out of MAX_ROUNDS raises
-    rather than mislabeling.
+    Scale (round 7): everything after the signature pass runs on the
+    signature quotient (_signature_components: one groupBy collapses
+    identical signatures, then banding, verify and components touch
+    distinct signatures only, at the 4-band width near_band_bits
+    derives from the rep count). Measured at sf0.1: 1.9M doc pairs → a
+    few hundred rep pairs; 7.2 s → ~2 s.
     """
     corpus = _dup_corpus_spark(spark, sf_dir)
     sig = _near_sig_spark(corpus).localCheckpoint(eager=True)
-    groups = (
-        sig.groupBy("simhash")
-        .agg(F.min("doc_id").alias("rep"), F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    rep_pairs = _near_cand_pairs(
-        groups.select(F.col("rep").alias("doc_id"), "simhash"), max_hamming=1
-    ).select("doc_a", "doc_b")
-    # n>=2 groups are internally connected at hamming 0: a rep
-    # self-loop keeps their members in the output even when the rep has
-    # no cross-signature neighbor
-    self_loops = groups.filter(F.col("n") >= 2).select(
-        F.col("rep").alias("doc_a"), F.col("rep").alias("doc_b")
-    )
-
-    from ..operators.components import connected_components
-
-    rep_labels = connected_components(
-        rep_pairs.unionByName(self_loops),
-        src="doc_a",
-        dst="doc_b",
-        distinct_pairs=True,
-    )
-    return (
-        sig.join(groups.select("simhash", "rep"), "simhash")
-        .join(rep_labels, F.col("rep") == F.col("node"))
-        .select(F.col("doc_id").alias("node"), F.col("component"))
+    return _signature_components(
+        sig, lambda n_reps: (1, near_band_bits(n_reps), NEAR_BANDS)
     )
 
 

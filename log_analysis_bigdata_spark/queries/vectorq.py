@@ -721,56 +721,32 @@ def _banded_near_dup_pairs(emb: DataFrame, bits: int, thr: float) -> DataFrame:
 
 def _near_dup_component_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id_a, id_b) edge list that is COMPONENT-EQUIVALENT to
-    embedding_near_dup's pair list, with the minhash exact-class star
-    collapse applied (r17 — VERDICT r16 task 4): vectors grouped by a
-    fixed-width xxhash64 pair over the raw embedding array collapse to
-    one representative before banding, members contribute one star edge
-    each to the class's min vec_id. Byte-identical embeddings have
-    identical sign patterns in EVERY band — a 2,500-member identical
-    class makes the bucket join m²/2-quadratic exactly like minhash's
-    degenerate bucket (measured: see the probe's dup-class tile) — and
-    cosine(a, a) rounds to 1.0 ≥ thr, so the class is a guaranteed
-    clique whose connectivity an (m−1)-edge star reproduces. Any
-    member's near-dup edge is its rep's edge (same vector), so
-    components are unchanged; the ladder inputs (bits, thr) still come
-    from the FULL corpus count, matching the oracle's bb CTE. Digest
-    collision needs two independent 64-bit agreements (~2^-128/class
-    pair) — the accepted verify_jaccard collision class. The PAIR
-    LISTING (embedding_near_dup) keeps the uncollapsed plan: its
+    embedding_near_dup's pair list: byte-identical embeddings collapse
+    to one representative before banding
+    (operators.dedup.exact_class_collapse over the raw embedding array)
+    and each other member contributes one star edge to the class's min
+    vec_id. Identical vectors share every band's sign pattern, so a
+    2,500-member class would make the bucket join m²/2-quadratic, and
+    cosine(a, a) rounds to 1.0 ≥ thr, so the class is the verified
+    clique the collapse requires. The ladder inputs (bits, thr) still
+    come from the FULL corpus count, matching the oracle's bb CTE. The
+    PAIR LISTING (embedding_near_dup) keeps the uncollapsed plan: its
     output is itself quadratic on such input, which no plan avoids
     (the minhash_dup_pairs caveat, operators/dedup.py)."""
+    from ..operators.dedup import exact_class_collapse
+
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
-    bits, thr = lsh_band_bits(n), near_dup_threshold(n)
-    ek = F.col("embedding")
-    from ..session import bounded_persist
-
-    keyed = bounded_persist(
-        "vectorq._near_dup_component_edges.keyed",
-        emb.select(
-            "vec_id",
-            "embedding",
-            F.xxhash64(ek).alias("ck1"),
-            F.xxhash64(ek, F.lit(-7046029254386353131)).alias("ck2"),
-        ),
+    reps, star = exact_class_collapse(
+        "vectorq._near_dup_component_edges",
+        emb.select("vec_id", "embedding"),
+        "vec_id",
+        F.col("embedding"),
     )
-    classes = keyed.select("ck1", "ck2", "vec_id").groupBy("ck1", "ck2").agg(
-        F.min("vec_id").alias("rep")
-    )
-    # both branches below (star edges, reps-only banding) read this
-    # join: persist it so the corpus-wide exchange runs once, not twice
-    with_rep = bounded_persist(
-        "vectorq._near_dup_component_edges.with_rep",
-        keyed.join(classes, ["ck1", "ck2"]),
-    )
-    star = with_rep.filter(F.col("vec_id") != F.col("rep")).select(
-        F.col("rep").alias("id_a"), F.col("vec_id").alias("id_b")
-    )
-    reps = with_rep.filter(F.col("vec_id") == F.col("rep")).select(
-        "vec_id", "embedding"
-    )
-    pairs = _banded_near_dup_pairs(reps, bits, thr).select("id_a", "id_b")
-    return pairs.unionByName(star)
+    pairs = _banded_near_dup_pairs(
+        reps, lsh_band_bits(n), near_dup_threshold(n)
+    ).select("id_a", "id_b")
+    return pairs.union(star)
 
 
 IVF_CELLS = 4

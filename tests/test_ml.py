@@ -22,7 +22,7 @@ from log_analysis_bigdata_spark.queries.mlq import (
     ml_lr_train_confusion,
 )
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, _jobs_run
 
 
 def test_logistic_scorer_matches_numpy(spark):
@@ -189,20 +189,6 @@ def test_stratified_split_partitions_df(spark):
     assert tr + te == n and 0 < te < n
     # disjoint by key
     assert train.join(test, "vec_id").count() == 0
-
-
-def _jobs_run(spark, group, action):
-    """(number of Spark jobs ``action()`` runs, its result), the jobs
-    counted by job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        result = action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group)), result
 
 
 def test_balanced_class_weights_sum(spark):

@@ -1254,6 +1254,55 @@ def test_synth_jpeg_color_stats_match_formula(spark):
         )
 
 
+def _wav_with_fmt(field: int, value: int) -> bytes:
+    """_build_wav(1) with one fmt-chunk field (1 = channels, 2 = sample
+    rate) overwritten."""
+    import struct as _s
+
+    from log_analysis_bigdata_spark.multimodal.assets import _build_wav
+
+    buf = bytearray(_build_wav(1))
+    at = buf.index(b"fmt ") + 8
+    _s.pack_into("<H" if field == 1 else "<I", buf, at + 2 * field, value)
+    return bytes(buf)
+
+
+@pytest.mark.parametrize(
+    "kind",
+    ["ppm_0x0", "bmp_0x0", "gif_0x0", "wav_0_channels", "wav_0_rate"],
+)
+def test_degenerate_media_headers_raise_named(kind):
+    """A zero-dimension P6/BMP/GIF raster or a 0-channel / 0 Hz WAV format
+    must be a named ValueError at parse time, as a zero-dimension PNG
+    is — not an IndexError or ZeroDivisionError from the stats code
+    inside the Python worker."""
+    from log_analysis_bigdata_spark.multimodal.assets import (
+        _build_bmp,
+        _build_gif,
+        _parse_bmp,
+        _parse_gif,
+        _ppm_pixels,
+        _rgb_stats,
+        _wav_row,
+    )
+
+    row, payload = {
+        "ppm_0x0": (lambda b: _rgb_stats(*_ppm_pixels(b)), b"P6\n0 0\n255\n"),
+        "bmp_0x0": (
+            lambda b: _rgb_stats(*_parse_bmp(b)),
+            _build_bmp(0, 0, np.zeros((0, 0, 3), np.uint8), top_down=False),
+        ),
+        "gif_0x0": (
+            lambda b: _rgb_stats(*_parse_gif(b)),
+            _build_gif(0, 0, np.zeros((0, 0), np.uint8), interlaced=False),
+        ),
+        "wav_0_channels": (_wav_row, _wav_with_fmt(1, 0)),
+        "wav_0_rate": (_wav_row, _wav_with_fmt(2, 0)),
+    }[kind]
+    with pytest.raises(ValueError, match="zero-dimension|degenerate PCM"):
+        row(payload)
+
+
 def test_png_rejects_bad_ihdr_and_zero_dims():
     """ADVICE r16: a 13-byte-rule violation or zero-dimension IHDR must
     be a ValueError (fail-loudly contract), never struct.error or a

@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from log_analysis_bigdata_spark.catalog import load_table
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, _jobs_run
 
 def test_salted_join_equals_plain_join(spark):
     from log_analysis_bigdata_spark.operators.skew import salted_join
@@ -401,6 +401,63 @@ def test_simhash_cand_pairs_width_independent(spark):
             assert got == want, f"width {bits} changed the result set"
 
 
+def test_simhash_builders_run_no_job_beyond_checkpoints(spark):
+    """Building simhash_near_pairs runs its signature checkpoint's jobs
+    and nothing else; building simhash_near_components runs its two
+    checkpoints' jobs plus the components solve's. The row counts the
+    band widths need ride those checkpoint jobs as Observations — a
+    separate count() is one more job per build."""
+    from log_analysis_bigdata_spark.operators.components import (
+        connected_components,
+    )
+    from log_analysis_bigdata_spark.queries.textq import (
+        _dup_corpus_spark,
+        _near_cand_pairs,
+        _near_sig_spark,
+        near_band_bits,
+        simhash_near_components,
+        simhash_near_pairs,
+    )
+
+    sig_jobs, sig = _jobs_run(
+        spark,
+        "simhash-sig",
+        lambda: _near_sig_spark(
+            _dup_corpus_spark(spark, SF_SMOKE)
+        ).localCheckpoint(eager=True),
+    )
+    pairs_jobs, _ = _jobs_run(
+        spark, "simhash-pairs", lambda: simhash_near_pairs(spark, SF_SMOKE)
+    )
+    assert pairs_jobs == sig_jobs
+
+    group_jobs, groups = _jobs_run(
+        spark,
+        "simhash-groups",
+        lambda: sig.groupBy("simhash")
+        .agg(F.min("doc_id").alias("rep"), F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True),
+    )
+    rep_edges = _near_cand_pairs(
+        groups.select(F.col("rep").alias("doc_id"), "simhash"),
+        1,
+        band_bits=near_band_bits(groups.count()),
+    ).select("doc_a", "doc_b")
+    solve_jobs, _ = _jobs_run(
+        spark,
+        "simhash-solve",
+        lambda: connected_components(
+            rep_edges, src="doc_a", dst="doc_b", distinct_pairs=True
+        ),
+    )
+    components_jobs, _ = _jobs_run(
+        spark,
+        "simhash-components",
+        lambda: simhash_near_components(spark, SF_SMOKE),
+    )
+    assert components_jobs == sig_jobs + group_jobs + solve_jobs
+
+
 def test_dedup_survivors_prefer_quality_over_min_id(spark):
     """The survivor-policy corpus plants each 10th doc twice: degraded
     (space-bloated) copy on the LOW doc_id, clean copy at +_SURV_SHIFT
@@ -787,6 +844,7 @@ def test_setequal_class_collapse_rotated_boilerplate(spark):
     from log_analysis_bigdata_spark.operators.dedup import (
         band_digests,
         candidate_pairs,
+        exact_class_collapse,
         minhash_dedup_pipeline,
         shingle_sets,
     )
@@ -803,26 +861,17 @@ def test_setequal_class_collapse_rotated_boilerplate(spark):
     ] + [(999, "entirely different text with no overlap at all here")]
     corpus = spark.createDataFrame(rows, ["doc_id", "text"])
 
-    sd = F.array_sort(F.array_distinct("hs"))
-    keyed = shingle_sets(corpus).select(
+    reps, star = exact_class_collapse(
+        "test_operators.rotated_boilerplate",
+        shingle_sets(corpus),
         "doc_id",
-        "hs",
-        F.xxhash64(sd).alias("ck1"),
-        F.xxhash64(sd, F.lit(-7046029254386353131)).alias("ck2"),
+        F.array_sort(F.array_distinct("hs")),
     )
-    classes = (
-        keyed.groupBy("ck1", "ck2")
-        .agg(F.min("doc_id").alias("rep"), F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    sizes = sorted(c["n"] for c in classes)
+    members = {r["rep"]: r["count"] for r in star.groupBy("rep").count().collect()}
+    sizes = sorted(1 + members.get(r["doc_id"], 0) for r in reps.collect())
     assert sizes == [1, m], sizes  # one m-member class + the outlier
     # only the representative reaches banding: candidate volume is
     # O(1), not m^2/2 = 276
-    reps = keyed.join(
-        keyed.groupBy("ck1", "ck2").agg(F.min("doc_id").alias("doc_id")),
-        ["ck1", "ck2", "doc_id"],
-    ).select("doc_id", "hs")
     assert candidate_pairs(band_digests(reps)).count() == 0
 
     out = {

@@ -370,6 +370,79 @@ def test_minhash_signature_invariants(spark, texts, rng):
             assert c is None or 0 <= c < MINHASH_P
 
 
+def _brute_force_components(sig: dict[int, int], max_hamming: int):
+    """{doc: min doc id of its component} over every doc pair within
+    ``max_hamming``, by union-find; docs with no such pair are absent."""
+    parent = {d: d for d in sig}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    linked = set()
+    for a in sig:
+        for b in sig:
+            if a < b and bin(sig[a] ^ sig[b]).count("1") <= max_hamming:
+                linked |= {a, b}
+                ra, rb = find(a), find(b)
+                parent[max(ra, rb)] = min(ra, rb)
+    return {d: find(d) for d in linked}
+
+
+@given(
+    bases=st.lists(
+        st.integers(min_value=0, max_value=(1 << 60) - 1),
+        min_size=1,
+        max_size=4,
+    ),
+    docs=st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=3),
+            st.sets(st.integers(min_value=0, max_value=5), max_size=3),
+        ),
+        min_size=1,
+        max_size=24,
+    ),
+    max_hamming=st.integers(min_value=1, max_value=3),
+)
+@example(
+    # a 3-member exact group with a near neighbour, an isolated
+    # 2-member exact group, and a singleton
+    bases=[0, (1 << 60) - 1, 0x0F0F0F0F0F0F0F0],
+    docs=[(0, set()), (0, set()), (0, set()), (0, {1}), (1, set()),
+          (1, set()), (2, set())],
+    max_hamming=1,
+)
+@settings(max_examples=10, deadline=None)
+def test_signature_components_equal_brute_force(
+    spark, bases, docs, max_hamming
+):
+    """textq._signature_components on a small signature table equals a
+    Python union-find over all doc pairs within ``max_hamming``:
+    repeated signatures, isolated n >= 2 groups (labelled by their min
+    doc id with no edge) and singletons (dropped unless linked). Doc
+    ids count DOWN so the min-id rep is never the first row."""
+    from log_analysis_bigdata_spark.queries.textq import (
+        _signature_components,
+    )
+
+    sig = {
+        100 - i: bases[b % len(bases)] ^ sum(1 << (7 * f) for f in flips)
+        for i, (b, flips) in enumerate(docs)
+    }
+    df = spark.createDataFrame(
+        sorted(sig.items()), "doc_id bigint, simhash bigint"
+    ).localCheckpoint(eager=True)
+    got = {
+        r["node"]: r["component"]
+        for r in _signature_components(
+            df, lambda n: (max_hamming, 60 // (max_hamming + 1), max_hamming + 1)
+        ).collect()
+    }
+    assert got == _brute_force_components(sig, max_hamming)
+
+
 @given(
     st.lists(
         st.tuples(
