@@ -20,6 +20,11 @@ projections (the reference's plan-authoring hazard, SURVEY §4).
 Template → regex compilation follows ``prepare_data_batch.ipynb:282-286``:
 ``re.escape`` the literal text, then turn escaped ``[*]`` into ``.*``,
 matched unanchored against the message (batch semantic, Skew-2 decision).
+Leading and trailing ``[*]`` are dropped first. ``rlike`` is an unanchored
+find, so an outer ``.*`` never changes whether a line matches, but on a
+line the template does not match it makes the engine retry the ``.*`` from
+every start offset: O(len²) backtracking per (line, template) pair, paid
+29 times per unmatched line.
 """
 
 from __future__ import annotations
@@ -31,10 +36,23 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+_WILDCARD = "[*]"
+
+
 def compile_template_regex(template: str) -> str:
-    """``[*]`` wildcard template → unanchored regex string."""
-    escaped = re.escape(template)
-    return escaped.replace(re.escape("[*]"), ".*")
+    """``[*]`` wildcard template → unanchored regex string.
+
+    Interior wildcards become ``.*``; leading and trailing ones are
+    stripped. Under an unanchored find ``.*X.*`` matches exactly the
+    lines ``X`` matches (``.`` skips line terminators, but a find may
+    start and stop anywhere), and the outer ``.*`` only costs O(len²)
+    backtracking on every line that does not match.
+    """
+    while template.startswith(_WILDCARD):
+        template = template[len(_WILDCARD):]
+    while template.endswith(_WILDCARD):
+        template = template[: -len(_WILDCARD)]
+    return re.escape(template).replace(re.escape(_WILDCARD), ".*")
 
 
 def event_id_expr(

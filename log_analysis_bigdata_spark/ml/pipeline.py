@@ -15,9 +15,11 @@ Reference parity (citations into `/root/reference/`):
 
 Scale notes: the split is one seeded Bernoulli sample per class (narrow,
 no shuffle) plus a left-anti join on the key — at 100 TB that anti join
-shuffles both sides once on the key; the weight map is K rows and always
-broadcast. LR itself is Spark ML's L-BFGS: each iteration is one
-tree-aggregated gradient pass, no per-row driver traffic.
+shuffles both sides once on the key; the class weights are a K-branch
+literal ``CASE`` column built from one K-row collect, so no join and no
+recomputed count table follows the training rows into the fit. LR
+itself is Spark ML's L-BFGS: each iteration is one tree-aggregated
+gradient pass, no per-row driver traffic.
 """
 
 from __future__ import annotations
@@ -78,19 +80,28 @@ def balanced_class_weights(
 ) -> DataFrame:
     """Attach `weight = N / (K * n_class)` to every row (`nb:597-607`).
 
-    The per-class count table is K rows: one ``collect`` gives both N and
-    K, and the table is broadcast so the join back is map-side at any
-    scale. An empty training set raises ``ValueError``.
+    The per-class count table is K rows: one ``collect`` gives N, K and
+    every n_class, and the weights go back as a K-branch literal
+    ``CASE label WHEN l THEN N/(K*n_l)`` column. A join against the
+    count table would leave a lazy aggregate in the plan that every LR
+    and evaluator pass recomputes over the whole input. Rows whose label
+    is not a counted class (a null label) are dropped, as an inner join
+    on the label drops them; a null label still counts toward N and K.
+    An empty training set raises ``ValueError``.
     """
-    cnt = train.groupBy(label_col).agg(F.count(F.lit(1)).alias("n"))
-    counts = cnt.collect()
+    counts = train.groupBy(label_col).agg(F.count(F.lit(1)).alias("n")).collect()
     if not counts:
         raise ValueError("balanced_class_weights: empty training set")
     n_total, k = sum(r["n"] for r in counts), len(counts)
-    weights = cnt.select(
-        label_col, (F.lit(float(n_total)) / (F.lit(k) * F.col("n"))).alias(weight_col)
+    classes = [(r[label_col], r["n"]) for r in counts if r[label_col] is not None]
+    label = F.col(label_col)
+    weight = F.lit(None).cast("double")
+    for i, (l, n) in enumerate(classes):
+        when = F.when if i == 0 else weight.when
+        weight = when(label == F.lit(l), F.lit(float(n_total) / (k * n)))
+    return train.filter(label.isin([l for l, _ in classes])).withColumn(
+        weight_col, weight
     )
-    return train.join(F.broadcast(weights), label_col)
 
 
 def train_weighted_lr(

@@ -11,9 +11,13 @@
   (a) the HOF form as one single select (no 29-deep plan nesting — the
   reference's plan hazard, SURVEY §4), which serves the speed layer
   (streaming.job.message_features counts each message's own EventId
-  array, no shuffle), and (b) a ``groupBy().pivot(values).count()``
-  form, which serves the batch layer: one shuffle with map-side partial
-  counts on (key, event_id) instead of shipping whole event arrays.
+  array, no shuffle), and (b) a one-shuffle conditional count,
+  ``groupBy(key).agg(count(when(event = e, 1)) per e)``, which serves the
+  batch layer: map-side partial counts per key instead of shipping whole
+  event arrays. It is the oracle's ``sum(CASE WHEN …)`` shape. A
+  ``groupBy().pivot()`` would shuffle twice (partial counts on
+  (key, event), then the pivot on key); (b) keeps the name
+  ``feature_counts_pivot`` only because its importers call it that.
 """
 
 from __future__ import annotations
@@ -53,21 +57,18 @@ def feature_counts_pivot(
     event_col: str,
     event_ids: Sequence[str],
 ) -> DataFrame:
-    """Wide per-key count table via explode-free groupBy().pivot().
+    """Wide per-key count table: one int column per id in ``event_ids``.
 
-    Passing the explicit ``event_ids`` value list keeps the plan static
-    (no extra distinct scan) and guarantees the column set matches the
-    feature contract even when an event never occurs. Nulls → 0.
+    One shuffle: ``count(when(event = e, 1))`` per id in a single
+    ``groupBy(key).agg``. The explicit ``event_ids`` list fixes the
+    column set, so an event that never occurs is a column of 0s. Rows
+    with a null event are dropped first, as ``event_traces`` does.
     """
-    wide = (
-        df.filter(F.col(event_col).isNotNull())
+    event = F.col(event_col)
+    return (
+        df.filter(event.isNotNull())
         .groupBy(F.col(key_col))
-        .pivot(event_col, list(event_ids))
-        .count()
-    )
-    return wide.select(
-        F.col(key_col),
-        *[F.coalesce(F.col(f"`{e}`"), F.lit(0)).cast("int").alias(e) for e in event_ids],
+        .agg(*[F.count(F.when(event == e, 1)).cast("int").alias(e) for e in event_ids])
     )
 
 

@@ -65,7 +65,7 @@ _LOADED = False
 # entry()).
 # --- BEGIN DRIVER WINDOW (generated by tools/rotate_window.py) ---
 # Round-19 window: 21 forced (age cap / never-verdicted),
-# 25 code-change re-verdict pins, 4 oldest-first pre-fills.
+# 28 code-change re-verdict pins, 1 oldest-first pre-fills.
 _DRIVER_WINDOW = (
     # (1) forced: needing a r19 verdict (registry order)
     "text_quality_docs",
@@ -115,11 +115,11 @@ _DRIVER_WINDOW = (
     "dedup_pipeline_docs",
     "dedup_components",
     "dup_cluster_size_histogram",
+    "feature_counts_events",
+    "constant_columns_detect",
+    "ml_lr_train_confusion",
     # (3) pre-fills: verdicts aging out soonest, alphabetical
     "ann_bucketed_topk",
-    "anti_join_docs_quarantine",
-    "attribution_revenue_touch",
-    "case_bucket_order_price",
 )
 # --- END DRIVER WINDOW ---
 

@@ -158,9 +158,10 @@ def event_traces_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("features", "A2", "A11"),
 )
 def feature_counts_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2/A11: the E1..E29 per-key count table, as groupBy().pivot() with
-    an explicit value list (static plan, map-side partial counts — the
-    100 TB-friendly form of the reference's 29 HOF withColumns)."""
+    """A2/A11: the E1..E29 per-key count table, as one groupBy with a
+    conditional count per explicit value (static plan, one shuffle of
+    map-side partial counts — the 100 TB-friendly form of the
+    reference's 29 HOF withColumns)."""
     ev = load_table(spark, sf_dir, "events")
     return feature_counts_pivot(ev, "user_id", "event_type", EVENT_TYPES)
 

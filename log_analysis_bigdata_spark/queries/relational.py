@@ -1183,9 +1183,9 @@ def skew_report_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def unpivot_lineitem_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot (melt): the wide→long reshape that turns per-column
-    metrics into (metric, value) rows — the inverse of the pivot the
-    feature table uses (A2/A11), here via Spark's native ``unpivot``
-    operator. Per-metric profile over the long table.
+    metrics into (metric, value) rows — the inverse of the long→wide
+    reshape the feature table uses (A2/A11), here via Spark's native
+    ``unpivot`` operator. Per-metric profile over the long table.
 
     Determinism: the average is integer-cents-sum / count (order-free);
     min/max are exact. Scale: unpivot is a narrow rowwise expand (×4),

@@ -155,35 +155,41 @@ def upsert_sink(target_dir: str, key_col: str, order_col: str):
         from pyspark.sql.window import Window as W
 
         spark = batch_df.sparkSession
-        batch = batch_df.withColumn("_bucket", bucket_of(F.col(key_col)))
-        # Tiny driver-side list (≤ UPSERT_N_BUCKETS ints) — partition
-        # pruning, not data collection.
-        touched = sorted(
-            r["_bucket"] for r in batch.select("_bucket").distinct().collect()
-        )
-        old_dirs = [
-            d for d in (f"{target_dir}/_bucket={b}" for b in touched)
-            if os.path.isdir(d)
-        ]
-        merged = batch
-        if old_dirs:
-            merged = (
-                spark.read.option("basePath", target_dir)
-                .parquet(*old_dirs)
-                .unionByName(batch)
+        # Two actions read the batch (the touched buckets, then the
+        # write); persisted, the source read, the stateful dedup and the
+        # template tag run once per micro-batch instead of once each.
+        batch = batch_df.withColumn("_bucket", bucket_of(F.col(key_col))).persist()
+        try:
+            # Tiny driver-side list (≤ UPSERT_N_BUCKETS ints) — partition
+            # pruning, not data collection.
+            touched = sorted(
+                r["_bucket"] for r in batch.select("_bucket").distinct().collect()
             )
-        w = W.partitionBy(key_col).orderBy(F.desc(order_col))
-        deduped = (
-            merged.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        (
-            deduped.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_bucket")
-            .parquet(target_dir)
-        )
+            old_dirs = [
+                d for d in (f"{target_dir}/_bucket={b}" for b in touched)
+                if os.path.isdir(d)
+            ]
+            merged = batch
+            if old_dirs:
+                merged = (
+                    spark.read.option("basePath", target_dir)
+                    .parquet(*old_dirs)
+                    .unionByName(batch)
+                )
+            w = W.partitionBy(key_col).orderBy(F.desc(order_col))
+            deduped = (
+                merged.withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") == 1)
+                .drop("_rn")
+            )
+            (
+                deduped.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("_bucket")
+                .parquet(target_dir)
+            )
+        finally:
+            batch.unpersist()
 
     return do_upsert
 

@@ -101,6 +101,18 @@ def test_feature_counts_both_variants_agree(spark):
     assert p == h == m == {"blk_1": (1, 1, 1), "blk_2": (1, 1, 0)}
 
 
+def test_feature_counts_pivot_one_shuffle(spark):
+    """The batch counter is one conditional-count aggregate: one shuffle
+    Exchange and no pivot; an event that never occurs counts 0."""
+    tagged = tag_events(_parsed(spark), TEMPLATES, message_col="message")
+    feats = feature_counts_pivot(tagged, "block_id", "event_id", ["E3", "E9"])
+    plan = feats._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1 and "pivotfirst" not in plan, plan
+    rows = {r["block_id"]: (r["E3"], r["E9"]) for r in feats.collect()}
+    # the unmatched WARN line of blk_1 has a null event and counts nowhere
+    assert rows == {"blk_1": (1, 0), "blk_2": (0, 0)}
+
+
 def test_session_and_label_stage(spark):
     parsed = _parsed(spark).filter(F.col("block_id") != "")
     sessions = sessionize(parsed, "block_id", "datetime", line_col="value")

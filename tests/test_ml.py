@@ -221,6 +221,48 @@ def test_balanced_class_weights_empty_raises(spark):
         balanced_class_weights(emb.limit(0), "label_index")
 
 
+def test_balanced_class_weights_literal_column(spark):
+    """The weights are a literal CASE column: no join and no aggregate
+    left in the output's plan. A null label counts toward N and K, as
+    in the join form, and its row is dropped, as the inner join drops
+    it."""
+    df = spark.createDataFrame(
+        [(1, 0.0), (2, 0.0), (3, 1.0), (4, None)], "id int, label_index double"
+    )
+    w = balanced_class_weights(df)
+    plan = w._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "Aggregate" not in plan, plan
+    got = {r["id"]: r["weight"] for r in w.collect()}
+    assert got == {1: 4 / (3 * 2), 2: 4 / (3 * 2), 3: 4 / (3 * 1)}
+
+
+def test_balanced_class_weights_lr_bit_identical_to_join_form(spark):
+    """LR fitted on the literal-column weights equals, bit for bit, LR
+    fitted on the broadcast join of the per-class count table."""
+    from pyspark.ml.functions import array_to_vector
+
+    from log_analysis_bigdata_spark.ml.pipeline import train_weighted_lr
+
+    train = load_table(spark, SF_SMOKE, "embeddings").select(
+        (F.col("embedding").getItem(0) >= 0).cast("double").alias("label_index"),
+        array_to_vector(F.col("embedding").cast("array<double>")).alias("features"),
+    ).coalesce(1)
+    cnt = train.groupBy("label_index").agg(F.count(F.lit(1)).alias("n"))
+    rows = cnt.collect()
+    n_total, k = sum(r["n"] for r in rows), len(rows)
+    joined = train.join(
+        F.broadcast(cnt.select(
+            "label_index",
+            (F.lit(float(n_total)) / (F.lit(k) * F.col("n"))).alias("weight"),
+        )),
+        "label_index",
+    )
+    ref = train_weighted_lr(joined)
+    got = train_weighted_lr(balanced_class_weights(train))
+    assert got.intercept == ref.intercept
+    assert got.coefficients.toArray().tolist() == ref.coefficients.toArray().tolist()
+
+
 def test_lr_learns_separable_target(spark):
     conf = {(r["label_index"], r["prediction"]): r["n"]
             for r in ml_lr_train_confusion(spark, SF_SMOKE).collect()}

@@ -101,6 +101,29 @@ def test_stream_upsert_last_write_wins(spark, tmp_path):
     assert rows[0]["E1"] == 5 and rows[0]["E2"] == 1
 
 
+def test_upsert_runs_each_micro_batch_plan_once(spark, tmp_path):
+    """The sink reads the micro-batch twice (touched buckets, then the
+    write) but its plan runs once: the dedup operator's metrics add up
+    over every execution, so (dropped + updated + late) / input rows is
+    the number of executions (perfbench's ``plan_executions``)."""
+    src = str(tmp_path / "src")
+    m = _msg("blk_-8", 2, 1)
+    _write_messages(src, [m, _msg("blk_-9", 1, 0), m])  # one byte-identical replay
+    q = run_file_stream(
+        spark, src, str(tmp_path / "tgt"), str(tmp_path / "ckpt"), TEMPLATES, EVENT_IDS
+    )
+    q.awaitTermination(120)
+    data = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(data) == 1 and data[0]["numInputRows"] == 3
+    (op,) = data[0]["stateOperators"]
+    seen = (
+        int(op["customMetrics"]["numDroppedDuplicateRows"])
+        + op["numRowsUpdated"]
+        + op["numRowsDroppedByWatermark"]
+    )
+    assert seen / data[0]["numInputRows"] == 1, op
+
+
 def test_upsert_partition_scoped(spark, tmp_path):
     """The serving table is hash-bucket partitioned and each upsert
     rewrites ONLY the buckets its batch keys hash into — untouched

@@ -9,6 +9,10 @@ HDFS.log_templates.csv's addStoredBlock family, E26-E28).
 
 from __future__ import annotations
 
+import re
+
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from log_analysis_bigdata_spark.functions.templates import (
@@ -67,3 +71,64 @@ def test_single_expression_not_stacked_withcolumns(spark):
     plan = tagged._jdf.queryExecution().optimizedPlan().toString()
     # one Project node containing the whole chain
     assert plan.count("Project") == 1
+
+
+# leading, trailing, interior and only-wildcard templates, with regex
+# metacharacters in the literal text; the differential test also runs
+# OVERLAP
+WILDCARDS = [
+    ("L", "[*]addStoredBlock"),
+    ("T", "blockMap updated:[*]"),
+    ("I", "Received[*]of size"),
+    ("LIT", "[*]a.b[*]c[*]"),
+    ("LL", "[*][*]request[*][*]"),
+    ("W", "[*]"),
+    ("WW", "[*][*]"),
+    ("N", "of size"),
+]
+
+_TOKENS = ["", " ", ":", "\n", "\r", ".", "a", "b", "c", "x", "addStoredBlock",
+           "blockMap", "updated", "Received", "of", "size", "request"]
+
+
+def _wrapped(template: str) -> str:
+    """The untrimmed compilation: every ``[*]``, outer ones included,
+    becomes ``.*``."""
+    return re.escape(template).replace(re.escape("[*]"), ".*")
+
+
+@given(
+    messages=st.lists(
+        st.lists(st.sampled_from(_TOKENS), max_size=12).map("".join),
+        min_size=1,
+        max_size=60,
+    )
+)
+@settings(max_examples=3, deadline=None)
+def test_trimmed_regex_matches_wrapped(spark, messages):
+    """Under rlike's unanchored find, dropping the outer ``.*`` changes
+    no match: both patterns of every template agree on every message
+    (one Spark job per example)."""
+    templates = WILDCARDS + OVERLAP
+    df = spark.createDataFrame([(m,) for m in ["", *messages]], ["message"])
+    msg = F.col("message")
+    cols = []
+    for i, (_, t) in enumerate(templates):
+        cols += [msg.rlike(compile_template_regex(t)).alias(f"t{i}"),
+                 msg.rlike(_wrapped(t)).alias(f"w{i}")]
+    for r in df.select("message", *cols).collect():
+        for i, (eid, _) in enumerate(templates):
+            assert r[f"t{i}"] == r[f"w{i}"], (eid, r["message"])
+
+
+def test_compiled_patterns_have_no_outer_wildcard():
+    for _, t in WILDCARDS + OVERLAP:
+        pat = compile_template_regex(t)
+        assert not pat.startswith(".*"), (t, pat)
+        # a trailing ".*" preceded by an even run of backslashes is a wildcard
+        if pat.endswith(".*"):
+            slashes = len(pat[:-2]) - len(pat[:-2].rstrip("\\"))
+            assert slashes % 2 == 1, (t, pat)
+    assert compile_template_regex("[*]a[*]b[*]") == "a.*b"
+    assert compile_template_regex("BLOCK*[*]") == "BLOCK\\*"
+    assert compile_template_regex("[*]") == ""
