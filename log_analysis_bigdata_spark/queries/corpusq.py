@@ -1082,7 +1082,7 @@ def corpus_to_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     row/token attrition as the output —
 
       raw corpus (documents + the standard 10% near-dup tile)
-        → Gopher-style quality gate          (textq.quality_filter_docs)
+        → Gopher-style quality gate          (textq.quality_gate)
         → MinHash→LSH→verify→components dedup, keep cluster minimum
                                              (operators/dedup.py)
         → benchmark decontamination: drop the src0 eval suite and any
@@ -1115,7 +1115,7 @@ def corpus_to_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    from ..functions.text import shingles, symbol_count, tokens
+    from ..functions.text import shingles, tokens
     from ..operators.components import connected_components
     from ..operators.dedup import (
         band_digests,
@@ -1123,13 +1123,7 @@ def corpus_to_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingle_sets,
         verify_jaccard,
     )
-    from .textq import (
-        QF_MAX_MEAN_WORD_LEN,
-        QF_MAX_SYMBOL_RATIO,
-        QF_MAX_TOKENS,
-        QF_MIN_MEAN_WORD_LEN,
-        QF_MIN_TOKENS,
-    )
+    from .textq import quality_gate
 
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.select("doc_id", "source", "text").unionByName(
@@ -1144,22 +1138,7 @@ def corpus_to_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sparkContext.defaultParallelism
     )
 
-    n_tok = F.size(tokens(F.col("text")))
-    # translate-based count — 9x cheaper than the regex it replaces,
-    # same value by definition (functions.text.symbol_count)
-    sym_ratio = symbol_count(F.col("text")).cast("double") / F.greatest(
-        F.length("text"), F.lit(1)
-    )
-    mean_wl = F.length(
-        F.replace(F.col("text"), F.lit(" "), F.lit(""))
-    ).cast("double") / F.greatest(n_tok, F.lit(1))
-    keep_q = (
-        (n_tok >= QF_MIN_TOKENS)
-        & (n_tok <= QF_MAX_TOKENS)
-        & (sym_ratio <= QF_MAX_SYMBOL_RATIO)
-        & (mean_wl >= QF_MIN_MEAN_WORD_LEN)
-        & (mean_wl <= QF_MAX_MEAN_WORD_LEN)
-    )
+    n_tok, _, _, keep_q = quality_gate(F.col("text"))
     base = corpus.select(
         "doc_id",
         "source",

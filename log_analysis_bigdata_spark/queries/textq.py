@@ -398,6 +398,31 @@ QF_MIN_MEAN_WORD_LEN = 2.0
 QF_MAX_MEAN_WORD_LEN = 12.0
 
 
+def quality_gate(text: Column) -> tuple[Column, Column, Column, Column]:
+    """The Gopher-style quality gate over a ``text`` column:
+    ``(n_tok, sym_ratio, mean_word_len, keep)`` as unrounded column
+    expressions, ``keep`` the boolean conjunction of the QF_* bounds —
+    the one definition behind quality_filter_docs and
+    corpusq.corpus_to_training_set's stage 1."""
+    n_tok = F.size(tokens(text))
+    # translate-based count — 9x cheaper than the regex it replaces,
+    # same value by definition (functions.text.symbol_count)
+    sym_ratio = symbol_count(text).cast("double") / F.greatest(
+        F.length(text), F.lit(1)
+    )
+    mean_wl = F.length(F.replace(text, F.lit(" "), F.lit(""))).cast(
+        "double"
+    ) / F.greatest(n_tok, F.lit(1))
+    keep = (
+        (n_tok >= QF_MIN_TOKENS)
+        & (n_tok <= QF_MAX_TOKENS)
+        & (sym_ratio <= QF_MAX_SYMBOL_RATIO)
+        & (mean_wl >= QF_MIN_MEAN_WORD_LEN)
+        & (mean_wl <= QF_MAX_MEAN_WORD_LEN)
+    )
+    return n_tok, sym_ratio, mean_wl, keep
+
+
 @register(
     "quality_filter_docs",
     oracle=f"""
@@ -432,22 +457,7 @@ def quality_filter_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup stage without a second pass.
     """
     docs = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(F.split(F.trim(F.col("text")), " +"))
-    # translate-based count — 9x cheaper than the regex it replaces,
-    # same value by definition (functions.text.symbol_count)
-    sym_ratio = symbol_count(F.col("text")).cast("double") / F.greatest(
-        F.length("text"), F.lit(1)
-    )
-    mean_wl = F.length(F.replace(F.col("text"), F.lit(" "), F.lit(""))).cast(
-        "double"
-    ) / F.greatest(n_tok, F.lit(1))
-    keep = (
-        (n_tok >= QF_MIN_TOKENS)
-        & (n_tok <= QF_MAX_TOKENS)
-        & (sym_ratio <= QF_MAX_SYMBOL_RATIO)
-        & (mean_wl >= QF_MIN_MEAN_WORD_LEN)
-        & (mean_wl <= QF_MAX_MEAN_WORD_LEN)
-    )
+    n_tok, sym_ratio, mean_wl, keep = quality_gate(F.col("text"))
     return docs.select(
         "doc_id",
         n_tok.cast("int").alias("n_tok"),

@@ -40,6 +40,15 @@ def norm(a: Column) -> Column:
     )
 
 
+def cosine4(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """Cosine of ``a`` and ``b`` from their norms ``na``/``nb``, rounded
+    to 4 decimals — the one similarity score every cosine query ranks
+    and thresholds on (oracle: ``round(_DOT_SQL / (na * nb), 4)``).
+    Callers pass the norms as they have them: ``norm(...)`` inline, or
+    a column precomputed once per side below a join."""
+    return F.round(dot(a, b) / (na * nb), 4)
+
+
 _DOT_SQL = (
     "list_aggregate(list_transform(list_zip({a}, {b}), "
     "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), 'sum')"
@@ -393,11 +402,8 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("qv")
     )
     e = emb.filter(F.col("vec_id") != QUERY_VEC_ID)
-    sim = F.round(
-        dot(F.col("embedding"), F.col("qv"))
-        / (norm(F.col("embedding")) * norm(F.col("qv"))),
-        4,
-    )
+    v, qv = F.col("embedding"), F.col("qv")
+    sim = cosine4(v, qv, norm(v), norm(qv))
     return (
         e.crossJoin(F.broadcast(q))
         .select("vec_id", "label", sim.alias("cosine"))
@@ -476,11 +482,8 @@ def ann_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = b.filter(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("embedding").alias("qv"), F.col("bucket").alias("qbucket")
     )
-    sim = F.round(
-        dot(F.col("embedding"), F.col("qv"))
-        / (norm(F.col("embedding")) * norm(F.col("qv"))),
-        4,
-    )
+    qv = F.col("qv")
+    sim = cosine4(e, qv, norm(e), norm(qv))
     return (
         b.filter(F.col("vec_id") != QUERY_VEC_ID)
         .join(F.broadcast(q), F.col("bucket") == F.col("qbucket"))
@@ -689,9 +692,7 @@ def _banded_near_dup_pairs(emb: DataFrame, bits: int, thr: float) -> DataFrame:
     # exchange bytes it saves. The oracle keeps the dedup-then-score
     # order (DISTINCT on ids), which is the equivalence proof run at
     # every parity gate.
-    cosine = F.round(
-        dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")), 4
-    )
+    cosine = cosine4(F.col("ea"), F.col("eb"), F.col("na"), F.col("nb"))
     cand = None
     for bcol in ("band0", "band1"):
         a = base.select(
@@ -797,35 +798,24 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid is the per-dimension mean of a seeded subset (vec_id mod k),
     which is exactly one Lloyd half-step and keeps the whole flow
     SQL-replayable for the oracle. Plan shape at scale: centroids are
-    k×d doubles → broadcast packed into ONE row; assignment is an
-    IN-ROW array_min argmin over the corpus scan (_assign_cells — the
-    r15 rewrite; the old dim-keyed join exploded n×d×k rows before its
-    two groupBy shuffles); the probe reads ~1/k of the rows. On a real
-    deployment the assignment is written back partitioned by cell so
-    probes are partition-pruned scans, and k grows to √N cells with an
-    nprobe>1 multi-cell probe for recall.
+    k×d doubles, collected at build time; assignment is the shared
+    Arrow/BLAS argmin over the corpus scan (:func:`_assign_cells`, one
+    B×d @ d×k matmul per Arrow batch, no n×k rows, no shuffle); the
+    probe reads ~1/k of the rows. On a real deployment the assignment
+    is written back partitioned by cell so probes are partition-pruned
+    scans, and k grows to √N cells with an nprobe>1 multi-cell probe
+    for recall.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    dims = emb.select(
-        "vec_id",
-        (F.col("vec_id") % IVF_CELLS).alias("seed_cell"),
-        F.posexplode("embedding").alias("dim", "x"),
-    ).select("vec_id", "seed_cell", "dim", F.col("x").cast("double").alias("x"))
-    _, cent_arr = _centroids(dims, "seed_cell")
-    ev = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
-    assign = _assign_cells(ev, cent_arr)
+    vecs = _vecs(emb)
+    _, cent_arr = _seed_centroids(vecs, IVF_CELLS)
+    assign = _assign_cells(vecs, cent_arr)
     e = assign.join(emb, "vec_id").select("vec_id", "cell", "label", "embedding")
     q = e.filter(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("embedding").alias("qv"), F.col("cell").alias("qcell")
     )
-    sim = F.round(
-        dot(F.col("embedding"), F.col("qv"))
-        / (norm(F.col("embedding")) * norm(F.col("qv"))),
-        4,
-    )
+    v, qv = F.col("embedding"), F.col("qv")
+    sim = cosine4(v, qv, norm(v), norm(qv))
     return (
         e.filter(F.col("vec_id") != QUERY_VEC_ID)
         .join(F.broadcast(q), F.col("cell") == F.col("qcell"))
@@ -1002,18 +992,10 @@ def ivf_topk_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe/k of the data, never all of it.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    dims = emb.select(
-        "vec_id",
-        (F.col("vec_id") % IVF_CELLS).alias("seed_cell"),
-        F.posexplode("embedding").alias("dim", "x"),
-    ).select("vec_id", "seed_cell", "dim", F.col("x").cast("double").alias("x"))
+    vecs = _vecs(emb)
     # the long (c, dim, cx) means also rank the centroids for the probe
-    cent, cent_arr = _centroids(dims, "seed_cell")
-    ev = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
-    assign = _assign_cells(ev, cent_arr)
+    cent, cent_arr = _seed_centroids(vecs, IVF_CELLS)
+    assign = _assign_cells(vecs, cent_arr)
     e = assign.join(emb, "vec_id").select("vec_id", "cell", "label", "embedding")
 
     q = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
@@ -1030,11 +1012,8 @@ def ivf_topk_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe = qdist.orderBy("qd2", "c").limit(IVF_NPROBE).select(
         F.col("c").alias("pcell")
     )
-    sim = F.round(
-        dot(F.col("embedding"), F.col("qv"))
-        / (norm(F.col("embedding")) * norm(F.col("qv"))),
-        4,
-    )
+    v, qv = F.col("embedding"), F.col("qv")
+    sim = cosine4(v, qv, norm(v), norm(qv))
     return (
         e.filter(F.col("vec_id") != QUERY_VEC_ID)
         .join(F.broadcast(probe), F.col("cell") == F.col("pcell"))
@@ -1107,11 +1086,7 @@ def knn_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = emb.filter(F.col("vec_id") % 100 != 7).select(
         "vec_id", "label", "embedding", norm(F.col("embedding")).alias("nc")
     )
-    cosine = F.round(
-        dot(F.col("embedding"), F.col("qv"))
-        / (F.col("nc") * F.col("nq")),
-        4,
-    )
+    cosine = cosine4(F.col("embedding"), F.col("qv"), F.col("nc"), F.col("nq"))
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
@@ -1168,53 +1143,19 @@ def kmeans_step_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustering driver loops on (IVF's coarse quantizer is this step's
     fixpoint; see ivf_topk for the half-step it seeds from).
 
-    Scale shape (round-4 rework — the r3 plan had 2 sort-merge joins on
-    vec_id, a full corpus shuffle per iteration): centroids are k×d
-    doubles → pivoted into k arrays and broadcast as ONE row; assignment
-    is then a pure column expression per vector (zip_with squared-diff +
-    aggregate-sum per candidate, array_sort argmin) — a narrow map, zero
-    corpus shuffle, zero join on vec_id. Recomputation is one
-    map-side-combinable groupBy(cell, dim); the shift/size joins are all
-    k-row broadcasts. A k-means driver repeats this plan with
+    Scale shape: assignment is the shared Arrow/BLAS argmin
+    (:func:`_assign_cells` — a narrow MapInArrow over the corpus scan,
+    ties to the lowest cell id, zero corpus shuffle, zero join on
+    vec_id), passing ``v`` through for the recomputation. That is one
+    map-side-combinable groupBy(cell, dim); the shift/size joins are
+    all k-row broadcasts. A k-means driver repeats this plan with
     ``localCheckpoint`` per round exactly like operators/components.py
     does for label propagation.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda v: v.cast("double")).alias("v"),
-    )
-    dims = vecs.select(
-        "vec_id",
-        (F.col("vec_id") % IVF_CELLS).alias("seed_cell"),
-        F.posexplode("v").alias("dim", "x"),
-    )
-    cent, cent_arr = _centroids(dims, "seed_cell")
-    # k rows → 1 row of k (cell, centroid-array) structs; the crossJoin
-    # below is the allowlisted broadcast-1-row pattern (PLAN_AUDIT.md).
-    cents_one = cent_arr.agg(
-        F.array_sort(F.collect_list(F.struct("cell", "cvec"))).alias("cents")
-    )
-    # Narrow assignment: per-candidate squared L2 in fixed dim order
-    # (deterministic float-add order), argmin via array_sort on
-    # (d2, cell) — ties break to the lowest cell id.
-    def d2_to(s):
-        return F.aggregate(
-            F.zip_with("v", s["cvec"], lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, d: acc + d,
-        )
-
-    assigned = vecs.crossJoin(F.broadcast(cents_one)).select(
-        "vec_id",
-        "v",
-        F.array_sort(
-            F.transform(
-                "cents",
-                lambda s: F.struct(d2_to(s).alias("d2"), s["cell"].alias("c")),
-            )
-        )[0]["c"].alias("cell"),
-    )
+    vecs = _vecs(emb)
+    cent, cent_arr = _seed_centroids(vecs, IVF_CELLS)
+    assigned = _assign_cells(vecs, cent_arr, extra="v")
     sizes = assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("n_members"))
     newcent = (
         assigned.select("cell", F.posexplode("v").alias("dim", "x"))
@@ -1464,16 +1405,8 @@ def semdedup_embedding_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     # into code. See semdedup_k/_SEMDEDUP_ASSIGN_SQL for the shared
     # integer formula.
     k = semdedup_k(emb.count())
-    vecs = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda v: v.cast("double")).alias("v"),
-    )
-    dims = vecs.select(
-        "vec_id",
-        (F.col("vec_id") % k).alias("seed_cell"),
-        F.posexplode("v").alias("dim", "x"),
-    )
-    _, cent_arr = _centroids(dims, "seed_cell")
+    vecs = _vecs(emb)
+    _, cent_arr = _seed_centroids(vecs, k)
     # BLAS assignment, not an in-row argmin: k grows with N here
     # (semdedup_k), so an interpreted fold is N·k·d scalar ops. The k×d
     # centroid matrix rides a broadcast (dim-table-sized: k ≤ N/1250 →
@@ -1640,10 +1573,11 @@ def hard_negatives_per_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         "qlabel",
         "vec_id",
         "label",
-        F.round(
-            dot(F.col("embedding"), F.col("qv"))
-            / (norm(F.col("embedding")) * F.col("qn")),
-            4,
+        cosine4(
+            F.col("embedding"),
+            F.col("qv"),
+            norm(F.col("embedding")),
+            F.col("qn"),
         ).alias("cosine"),
     )
     best = scored.groupBy("qid", "qlabel").agg(
@@ -1931,6 +1865,43 @@ def _cb_arr(cb: DataFrame) -> DataFrame:
     )
 
 
+def _adc(probe: DataFrame, cb: DataFrame, keys: list[str]) -> DataFrame:
+    """The integer-micro-unit ADC table of the probed cells — the
+    oracle's ``qr``/``adc`` CTEs. ``probe`` carries (``keys``, cell, qv,
+    cvec); per (``keys``, cell, sub, code) the query residual
+    ``qv − cvec`` is scored against the broadcast ``cb`` codebook
+    (sub, code, subdim, cx) as Σ(qrx − cx)², scaled to BIGINT
+    ``qd2u`` so the per-candidate sum downstream is order-independent
+    (money-sum pattern)."""
+    qr = probe.select(
+        *keys,
+        "cell",
+        F.posexplode(
+            F.zip_with("qv", "cvec", lambda x, c: x - c)
+        ).alias("dim", "qrx"),
+    ).select(
+        *keys,
+        "cell",
+        F.expr(f"dim div {PQ_SUBDIM}").alias("sub"),
+        (F.col("dim") % PQ_SUBDIM).alias("subdim"),
+        "qrx",
+    )
+    return (
+        qr.join(F.broadcast(cb), ["sub", "subdim"])
+        .groupBy(*keys, "cell", "sub", "code")
+        .agg(
+            F.round(
+                F.sum(
+                    (F.col("qrx") - F.col("cx")) * (F.col("qrx") - F.col("cx"))
+                )
+                * 1_000_000
+            )
+            .cast("long")
+            .alias("qd2u")
+        )
+    )
+
+
 def _centroids(dims: DataFrame, key: str) -> tuple[DataFrame, DataFrame]:
     """Per-cell mean vectors from a dim-exploded (``key``, dim, x) frame
     — the ONE centroid builder behind the IVF, k-means, SemDeDup and
@@ -1948,6 +1919,27 @@ def _centroids(dims: DataFrame, key: str) -> tuple[DataFrame, DataFrame]:
         ).alias("cvec")
     )
     return cent, cent_arr
+
+
+def _vecs(emb: DataFrame) -> DataFrame:
+    """(vec_id, v: array<double>) — the embedding cast to double once,
+    the input shape of :func:`_seed_centroids` and :func:`_assign_cells`."""
+    return emb.select(
+        "vec_id",
+        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+    )
+
+
+def _seed_centroids(vecs: DataFrame, k: int) -> tuple[DataFrame, DataFrame]:
+    """:func:`_centroids` of the seed cells ``vec_id % k`` over
+    :func:`_vecs` rows — the deterministic one-Lloyd-half-step seeding
+    the IVF, k-means and SemDeDup oracles replay as
+    ``vec_id % k AS seed_cell``."""
+    dims = vecs.select(
+        (F.col("vec_id") % k).alias("seed_cell"),
+        F.posexplode("v").alias("dim", "x"),
+    )
+    return _centroids(dims, "seed_cell")
 
 
 def _assign_cells(
@@ -2161,10 +2153,7 @@ def _ivfpq_index(
     cent_arr = emb.sparkSession.createDataFrame(
         cent_rows, cent_arr_plan.schema
     )
-    ev = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
+    ev = _vecs(emb)
     # nearest-centroid assignment + residual out of ONE Arrow/BLAS
     # pass (r17): no n×k rows, no shuffle — and no ev ⋈ assign join to
     # rebuild the residual (it previously shuffled the raw vectors by
@@ -2268,31 +2257,7 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("qd2", "cell")
         .limit(nprobe)
     )
-    qr = probe.join(F.broadcast(q)).select(
-        "cell",
-        F.posexplode(
-            F.zip_with("qv", "cvec", lambda x, c: x - c)
-        ).alias("dim", "qrx"),
-    ).select(
-        "cell",
-        F.expr(f"dim div {PQ_SUBDIM}").alias("sub"),
-        (F.col("dim") % PQ_SUBDIM).alias("subdim"),
-        "qrx",
-    )
-    adc = (
-        qr.join(F.broadcast(cb), ["sub", "subdim"])
-        .groupBy("cell", "sub", "code")
-        .agg(
-            F.round(
-                F.sum(
-                    (F.col("qrx") - F.col("cx")) * (F.col("qrx") - F.col("cx"))
-                )
-                * 1_000_000
-            )
-            .cast("long")
-            .alias("qd2u")
-        )
-    )
+    adc = _adc(probe.join(F.broadcast(q)), cb, keys=[])
     approx = (
         codes.join(F.broadcast(adc), ["cell", "sub", "code"])
         .filter(F.col("vec_id") != QUERY_VEC_ID)
@@ -2300,11 +2265,8 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("qd2u").alias("ad2u"))
     )
     cand = approx.orderBy("ad2u", "vec_id").limit(cand_c)
-    cosine = F.round(
-        dot(F.col("embedding"), F.col("qv"))
-        / (norm(F.col("embedding")) * norm(F.col("qv"))),
-        4,
-    )
+    v, qv = F.col("embedding"), F.col("qv")
+    cosine = cosine4(v, qv, norm(v), norm(qv))
     return (
         # the C-row candidate set broadcasts into the re-rank: the raw
         # vectors are touched by one hash-probe scan, never shuffled
@@ -2410,9 +2372,7 @@ IVFPQ_JOIN_K = 10  # per-query neighbors (recall@10 is the pinned metric)
     """,
     tags=("vector", "ann", "ivfpq", "knn", "join", "batched", "topk"),
 )
-def ivfpq_knn_join(
-    spark: SparkSession, sf_dir: str, *, adc_chunks: int = 1
-) -> DataFrame:
+def ivfpq_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched IVF-PQ k-NN JOIN: top-10 approximate cosine
     neighbors for EVERY query in the block (vec_id % 100 == 7 — the
     same query set as the exact brute-force knn_join_topk), served from
@@ -2438,21 +2398,9 @@ def ivfpq_knn_join(
     the corpus. Brute-force scoring is O(N·Q·d); this reads N 8-byte
     code rows once + re-ranks Q·C raw vectors.
 
-    For very large Q the stacked ADC table outgrows a single broadcast
-    (Q × nprobe × 256 rows): ``adc_chunks > 1`` bounds it by splitting
-    the materialized ADC table into ``query_id % adc_chunks`` blocks
-    and scanning the code index once PER BLOCK (each scan broadcasts
-    only its block), trading scans for broadcast ceiling — per-query
-    results are independent, so the union is exactly the unchunked
-    answer (equality-tested in test_properties). The default (1) keeps
-    the single-scan plan; the driver/bench path never chunks at tested
-    SFs.
-
     Determinism: candidate cuts on integer (ad2u, vec_id), final rank
     on (round-4 cosine, vec_id) — the knn_join_topk pattern; the ADC
-    integer-micro-unit sum is order-independent (money-sum pattern);
-    chunking only partitions the broadcast side of the code-index
-    join, so it cannot re-order any tie-break.
+    integer-micro-unit sum is order-independent (money-sum pattern).
     """
     from pyspark.sql.window import Window
 
@@ -2482,61 +2430,14 @@ def ivfpq_knn_join(
         .select("query_id", "cell", "qv", "cvec")
     )
     # stacked per-(query, cell) residuals -> ONE integer ADC table
-    qr = probe.select(
-        "query_id",
-        "cell",
-        F.posexplode(
-            F.zip_with("qv", "cvec", lambda x, c: x - c)
-        ).alias("dim", "qrx"),
-    ).select(
-        "query_id",
-        "cell",
-        F.expr(f"dim div {PQ_SUBDIM}").alias("sub"),
-        (F.col("dim") % PQ_SUBDIM).alias("subdim"),
-        "qrx",
-    )
-    adc = (
-        qr.join(F.broadcast(cb), ["sub", "subdim"])
-        .groupBy("query_id", "cell", "sub", "code")
-        .agg(
-            F.round(
-                F.sum(
-                    (F.col("qrx") - F.col("cx")) * (F.col("qrx") - F.col("cx"))
-                )
-                * 1_000_000
-            )
-            .cast("long")
-            .alias("qd2u")
-        )
-    )
+    adc = _adc(probe, cb, keys=["query_id"])
     # ONE pass over the code index: each code row meets only the
-    # queries probing its cell (broadcast hash join on cell/sub/code).
-    # Chunked path (very large Q): materialize the stacked ADC table
-    # and the corpus codes once, then scan the codes once per
-    # query-block with only that block's ADC rows broadcast — the
-    # broadcast ceiling becomes Q/adc_chunks × nprobe × 256 rows.
-    corpus_codes = codes.filter(F.col("vec_id") % 100 != 7)
-    if adc_chunks > 1:
-        from functools import reduce
-
-        adc = adc.localCheckpoint(eager=True)
-        corpus_codes = corpus_codes.localCheckpoint(eager=True)
-        joined = reduce(
-            DataFrame.unionByName,
-            [
-                corpus_codes.join(
-                    F.broadcast(
-                        adc.filter(F.col("query_id") % adc_chunks == i)
-                    ),
-                    ["cell", "sub", "code"],
-                )
-                for i in range(adc_chunks)
-            ],
-        )
-    else:
-        joined = corpus_codes.join(F.broadcast(adc), ["cell", "sub", "code"])
-    approx = joined.groupBy("query_id", "vec_id").agg(
-        F.sum("qd2u").alias("ad2u")
+    # queries probing its cell (broadcast hash join on cell/sub/code)
+    approx = (
+        codes.filter(F.col("vec_id") % 100 != 7)
+        .join(F.broadcast(adc), ["cell", "sub", "code"])
+        .groupBy("query_id", "vec_id")
+        .agg(F.sum("qd2u").alias("ad2u"))
     )
     wc = Window.partitionBy("query_id").orderBy("ad2u", "vec_id")
     cand = (
@@ -2547,10 +2448,8 @@ def ivfpq_knn_join(
     # exact re-rank: the Q×C candidate set broadcasts into one
     # hash-probe scan of the raw vectors; norms cost one fold per side
     qn = qs.select("query_id", "qv", norm(F.col("qv")).alias("nq"))
-    cosine = F.round(
-        dot(F.col("embedding"), F.col("qv"))
-        / (norm(F.col("embedding")) * F.col("nq")),
-        4,
+    cosine = cosine4(
+        F.col("embedding"), F.col("qv"), norm(F.col("embedding")), F.col("nq")
     )
     wr = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
     return (
@@ -2682,11 +2581,7 @@ def ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits = ivf_cell_bits(hist.count())
     cent_arr, cb, codes = _ivfpq_index(hist, bits)
 
-    nev = newb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
-    ncodes = _ivfpq_encode(nev, cent_arr, _cb_arr(cb))
+    ncodes = _ivfpq_encode(_vecs(newb), cent_arr, _cb_arr(cb))
 
     # history occupancy: one row per (vec, sub) in codes — the sub=0
     # slice counts vectors without a distinct-agg (partial-aggregated,

@@ -92,6 +92,15 @@ def test_ivf_centroids_broadcast(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_kmeans_assigns_with_shared_blas_kernel(spark):
+    """k-means assignment runs through the one nearest-centroid kernel
+    (vectorq._assign_cells, a MapInArrow over the corpus scan), not an
+    in-row argmin over a cross-joined one-row centroid table."""
+    plan = _plan(spark, "kmeans_step_shift")
+    assert "MapInArrow" in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
 def test_ivfpq_codebook_and_adc_broadcast(spark):
     """IVF-PQ's scale contract: the centroids (≤256×64 rows), residual
     codebook (≤1 024 rows), probe list and ADC table all broadcast —

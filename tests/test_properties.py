@@ -850,30 +850,6 @@ def test_ivfpq_knn_join_recall_sf001(spark):
         assert abs(r["cosine"] - exact) < 1e-9, r
 
 
-def test_ivfpq_knn_join_adc_chunking_is_exact(spark):
-    """The very-large-Q bound (VERDICT r13 task 8, closing the
-    vectorq.py docstring's own caveat): ``adc_chunks=3`` splits the
-    stacked ADC table into query blocks and scans the code index once
-    per block with a bounded broadcast. Per-query results are
-    independent of the blocking, so the union must equal the
-    single-scan answer EXACTLY — same rows, same integer pq_d2, same
-    round-4 cosines, same ranks (an intentionally small chunk size on
-    the 5-query corpus forces blocks of 1-2 queries, so a partitioning
-    bug cannot hide in a single well-filled block)."""
-    from log_analysis_bigdata_spark.queries import all_queries
-    from log_analysis_bigdata_spark.queries.vectorq import ivfpq_knn_join
-
-    sf = "/root/testdata/sf0.001"
-    key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
-    base = sorted(
-        all_queries()["ivfpq_knn_join"].spark(spark, sf).collect(), key=key
-    )
-    chunked = sorted(
-        ivfpq_knn_join(spark, sf, adc_chunks=3).collect(), key=key
-    )
-    assert [r.asDict() for r in chunked] == [r.asDict() for r in base]
-
-
 def test_ivfpq_knn_join_recall_20k_diffuse(spark, tmp_path):
     """THE scale pin for the batched retrieval shape: the same N=20k
     diffuse fixture as test_ivfpq_recall_20k_diffuse, but ALL 200

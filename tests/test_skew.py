@@ -166,6 +166,44 @@ def test_semdedup_subcell_caps_adversarial_cell(spark, tmp_path):
     assert not problems, "; ".join(problems)
 
 
+def test_kmeans_all_ties_assign_lowest_cell(spark, tmp_path):
+    """All-identical vectors tie every centroid distance, so the
+    k-means step must put the whole corpus in cell 0 (the lowest cell
+    id, np.argmin's first minimum over cell-sorted centroids) with a
+    zero shift, and match the DuckDB oracle bit-for-bit. DuckDB's
+    ``arg_min(c, d2)`` keeps whichever tied row it meets first, so the
+    registered oracle spreads this corpus over all four cells; the
+    comparison swaps in the explicit (d2, c) lexicographic min the
+    SemDeDup oracle uses, which is the tie rule the engine promises."""
+    import duckdb
+
+    from log_analysis_bigdata_spark.queries import all_queries
+    from tests.oracle_harness import strict_compare_frames
+
+    d = str(tmp_path)
+    n = make_tied_embeddings(d)["n_vecs"]
+    qd = all_queries()["kmeans_step_shift"]
+    spdf = qd.spark(spark, d).toPandas()
+
+    assert list(spdf["cell"]) == [0]
+    assert int(spdf["n_members"][0]) == n
+    assert float(spdf["centroid_shift"][0]) == 0.0
+
+    tie = "arg_min(c, d2) AS cell"
+    assert qd.oracle.count(tie) == 1
+    oracle = qd.oracle.replace(
+        tie, "(min(struct_pack(d2 := d2, c := c))).c AS cell"
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{d}/embeddings.parquet')"
+    )
+    dpdf = con.execute(oracle).fetchdf()
+    problems, _ = strict_compare_frames(spdf, dpdf)
+    assert not problems, "; ".join(problems)
+
+
 def test_semdedup_zero_vectors_match_oracle(spark, tmp_path):
     """Zero-norm embeddings make a pair's cosine 0/0: NaN in the pair
     kernel, which never qualifies, and NULL in DuckDB, where

@@ -79,10 +79,6 @@ BNLJ_ALLOWED = {
         "1-row corpus-count (n) cross join into the d^2/2-row "
         "pair-sum table"
     ),
-    "kmeans_step_shift": (
-        "1-row broadcast of k pivoted centroid arrays; assignment is a "
-        "narrow per-row argmin, no corpus shuffle"
-    ),
     "bm25_search_docs": "1-row corpus-stats (N, avgdl) cross join",
     "mixture_temperature_sample": (
         "1-row mixture totals (Σw_e4, token budget) cross join into "
