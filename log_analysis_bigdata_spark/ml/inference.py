@@ -126,7 +126,10 @@ def load_model_artifact(path: str):
             return pickle.load(f)
 
 
-def threshold_prediction(score: Column, threshold: float = 0.83) -> Column:
-    """score ≥ t → 1 else 0 (`ML_predict.py:113`, t from
-    `kafka_consumer.py:35`)."""
-    return (score >= F.lit(float(threshold))).cast("int")
+# The alert threshold on the model score (`kafka_consumer.py:35`).
+SCORE_THRESHOLD = 0.83
+
+
+def threshold_prediction(score: Column) -> Column:
+    """score ≥ SCORE_THRESHOLD → 1 else 0 (`ML_predict.py:113`)."""
+    return (score >= F.lit(SCORE_THRESHOLD)).cast("int")

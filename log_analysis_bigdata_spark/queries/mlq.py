@@ -18,7 +18,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..ml.inference import logistic_scorer_udf, threshold_prediction
+from ..ml.inference import (
+    SCORE_THRESHOLD,
+    logistic_scorer_udf,
+    threshold_prediction,
+)
 from ..ml.pipeline import balanced_class_weights, train_weighted_lr
 from . import register
 
@@ -27,7 +31,6 @@ from . import register
 SCORE_DIM = 64
 SCORE_WEIGHTS = [((i * 37) % 19 - 9) / 10.0 for i in range(SCORE_DIM)]
 SCORE_BIAS = 0.1
-SCORE_THRESHOLD = 0.83
 
 _W_SQL = "[" + ", ".join(repr(w) for w in SCORE_WEIGHTS) + "]::DOUBLE[]"
 
@@ -66,7 +69,7 @@ def ml_score_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "label",
         F.round("s", 4).alias("score"),
-        threshold_prediction(F.col("s"), SCORE_THRESHOLD).alias("prediction"),
+        threshold_prediction(F.col("s")).alias("prediction"),
     )
 
 

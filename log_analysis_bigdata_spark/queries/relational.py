@@ -1650,22 +1650,13 @@ def ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Exact-count regime bound for heavy_hitters_topk: up to this many
-# distinct keys, a map-side-combined groupBy count is both exact and
-# cheap (the exchange carries keys, not rows — 100k keys x 8B ids is
-# ~MBs of shuffle at any row count); beyond it the space-saving sketch
-# arm engages. The 5% rsd of approx_count_distinct makes the gate fuzzy
-# only within +-5% of the bound, where BOTH arms are defensible.
-HH_EXACT_MAX_KEYS = 100_000
-
-
 def _hh_ordered_top10(counts: DataFrame) -> DataFrame:
-    """The final cut of heavy_hitters_topk, shared by both arms:
-    orderBy + limit plans as TakeOrderedAndProject (per-partition
-    top-10 heaps merged on the driver) — NOT a row_number window,
-    whose unpartitioned WindowExec would move every key count to a
-    single partition first (VERDICT r10 task 5). Rank is assigned
-    from the position in the collected 10-row result."""
+    """The final cut of heavy_hitters_topk: orderBy + limit plans as
+    TakeOrderedAndProject (per-partition top-10 heaps merged on the
+    driver) — NOT a row_number window, whose unpartitioned WindowExec
+    would move every key count to a single partition first (VERDICT
+    r10 task 5). Rank is assigned from the position in the collected
+    10-row result."""
     return counts.orderBy(F.desc("n"), F.asc_nulls_last("user_id")).limit(10)
 
 
@@ -1684,156 +1675,25 @@ def _hh_ordered_top10(counts: DataFrame) -> DataFrame:
     SELECT user_id, n, CAST(rn AS INTEGER) AS rank
     FROM r WHERE rn <= 10 ORDER BY rn
     """,
-    tags=("agg", "heavy-hitters", "sketch", "topk", "two-pass"),
+    tags=("agg", "heavy-hitters", "topk"),
 )
 def heavy_hitters_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-10 heaviest keys, regime-gated (r9 — the sf1 sweep caught
-    the sketch arm losing recall on near-uniform keys):
+    """Top-10 heaviest keys by exact count: groupBy-count, then the
+    ordered top-10 cut collected to the driver and ranked by position.
 
-    - bounded key cardinality (<= HH_EXACT_MAX_KEYS, decided by one
-      cheap approx_count_distinct pass): EXACT groupBy-count — with
-      map-side combine the exchange carries O(partitions x keys) rows
-      regardless of event count, so "exact" is also the FAST plan;
-    - huge cardinality: the space-saving candidates + exact-recount
-      two-pass (_hh_sketch_counts), SELF-VERIFYING (code-review r9):
-      the candidate pass also records each batch's 50th-largest local
-      count, whose sum U upper-bounds any NON-candidate key's total
-      (a key outside every batch's top-50 gained at most t_b rows in
-      batch b). If the 10th candidate's exact count exceeds U the
-      top-10 is PROVABLY complete; otherwise (near-uniform keys, where
-      no bounded-memory sketch can rank near-ties) the query falls
-      back to the exact groupBy. Cardinality alone is NOT a skew
-      proof — the bound check is what makes the sketch arm safe.
-
-    Every exit is therefore exact: gate-exact, verified-sketch, or
-    fallback-exact — the oracle's full groupBy answer in all cases.
+    Exact is also the cheap plan at any row count: the hash aggregate
+    combines counts map-side, so the exchange carries O(partitions x
+    distinct keys) rows, never the event stream. The NULL key is an
+    ordinary group; ASC NULLS LAST in the tie-break matches DuckDB's
+    default ordering.
     """
     ev = load_table(spark, sf_dir, "events").select("user_id")
-
-    # regime gate, one cheap narrow pass: an exact groupBy-count is THE
-    # right plan whenever the key cardinality is bounded — map-side
-    # combine collapses each partition to its distinct keys before the
-    # exchange, so the shuffle is O(partitions x keys), independent of
-    # row count. approx_count_distinct at 5% rsd is plenty for a
-    # 100k-key threshold decision.
-    gate = ev.agg(
-        F.approx_count_distinct("user_id").alias("k"),
-        F.sum(F.col("user_id").isNull().cast("long")).alias("null_n"),
-    ).collect()[0]
-    n_keys, null_n = gate["k"], gate["null_n"] or 0
-    exact = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
-    if n_keys <= HH_EXACT_MAX_KEYS:
-        counts = exact
-    else:
-        # the sketch arm sees non-null keys only: pandas value_counts
-        # drops NaN and an equi-join can't recount a NULL key (ADVICE
-        # r9) — so the NULL group, already counted exactly by the gate
-        # pass, is unioned in as its own exact row. The U certificate
-        # still holds: every non-candidate non-null key is bounded by
-        # U, and NULL is never a non-candidate.
-        sk_counts, bound = _hh_sketch_counts(
-            ev.filter(F.col("user_id").isNotNull()) if null_n else ev
-        )
-        if null_n:
-            sk_counts = sk_counts.unionByName(
-                spark.createDataFrame([(None, null_n)], "user_id long, n long")
-            )
-        top = _hh_ordered_top10(sk_counts).collect()
-        if len(top) == 10 and top[-1]["n"] > bound:
-            # provably complete — and the collected rows already ARE
-            # the exact top-10, so build the result from them instead
-            # of re-executing the candidate pass + recount through the
-            # row_number window (ADVICE r9: sk_counts isn't persisted;
-            # routing it through `counts` ran the expensive arm twice)
-            return spark.createDataFrame(
-                [(r["user_id"], r["n"], i + 1) for i, r in enumerate(top)],
-                "user_id long, n long, rank int",
-            )
-        counts = exact  # sketch cannot certify this distribution
-    # ASC NULLS LAST tie-break matches DuckDB's default (Spark's plain
-    # asc sorts nulls first — divergent only on a null-keyed corpus);
-    # rank comes from the position in the ordered LIMIT (see
-    # _hh_ordered_top10), not a single-partition row_number window.
+    counts = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
     top = _hh_ordered_top10(counts).collect()
     return spark.createDataFrame(
         [(r["user_id"], r["n"], i + 1) for i, r in enumerate(top)],
         "user_id long, n long, rank int",
     )
-
-
-def _hh_sketch_counts(ev: DataFrame) -> tuple[DataFrame, int]:
-    """The huge-cardinality arm of heavy_hitters_topk: space-saving
-    candidates + exact recount + a provable completeness bound.
-
-    ``ev`` must be null-free on ``user_id``: value_counts silently
-    drops NaN and the recount equi-join can't match NULL, so a NULL
-    group would be invisible to both the candidates and the U bound —
-    the caller counts NULL exactly and unions it in (ADVICE r9).
-
-    1. candidate generation — per Arrow batch, keep the local top-m
-       (m=50) keys AND the batch's non-candidate ceiling t_b (the
-       50th-largest local count; 0 when the batch had <= 50 distinct
-       keys, since then every key is a candidate). ``mapInPandas``,
-       zero shuffle;
-    2. exact recount — broadcast-semi-join the raw stream down to
-       candidate rows only, then an exact hash agg over that slice.
-
-    Returns ``(counts, U)`` with U = sum of t_b: a key missed by EVERY
-    batch's top-m gained at most t_b rows in batch b, so its total is
-    <= U — the caller certifies the top-k by comparing the k-th
-    candidate's exact count against U, and falls back to exact
-    counting when the certificate fails (near-uniform keys: measured
-    at the r9 sf1 sweep, 15,000 users with counts 40-99 lost the true
-    top-10 to per-batch near-ties).
-
-    At 100 TB with billions of long-tail keys, pass 2 shuffles only the
-    candidate keys' rows — an exact groupBy would hash-aggregate
-    billions of keys per executor and spill; on the skewed
-    distributions that regime carries, the certificate passes and the
-    exact fallback never runs.
-
-    CONFIG SENSITIVITY (ADVICE r4): candidate recall depends on the
-    Arrow batch size (spark.sql.execution.arrow.maxRecordsPerBatch —
-    PINNED to 10k in session.get_spark since round 6, with a test
-    asserting the effective value) and input partitioning, not only on
-    the data. The recall remedies are raising m (cost: m keys per batch
-    through the broadcast) or a count-min pre-filter — and the U
-    certificate turns any residual recall loss from silent wrong
-    answers into a fallback.
-    """
-    import pandas as pd
-
-    def local_topm(batches):
-        for pdf in batches:
-            vc = pdf["user_id"].value_counts()
-            top = vc.head(50)
-            t_b = int(top.iloc[-1]) if len(vc) > 50 else 0
-            yield pd.DataFrame(
-                {
-                    "user_id": pd.array(
-                        top.index.tolist() + [None], dtype="Int64"
-                    ),
-                    "t": pd.array(
-                        [None] * len(top) + [t_b], dtype="Int64"
-                    ),
-                }
-            )
-
-    raw = ev.mapInPandas(local_topm, "user_id long, t long").persist()
-    bound = raw.agg(F.sum("t").alias("u")).collect()[0]["u"] or 0
-    cands = (
-        raw.filter(F.col("t").isNull())
-        .select("user_id")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    raw.unpersist(blocking=False)
-    counts = (
-        ev.join(F.broadcast(cands), "user_id")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    return counts, int(bound)
 
 
 @register(

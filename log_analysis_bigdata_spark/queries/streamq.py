@@ -363,11 +363,12 @@ def stream_static_enrich_segments(
           "applyInPandasWithState"),
 )
 def stream_topk_user_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming heavy hitters — the incremental rendering of
-    heavy_hitters_topk's batch shape: a REAL Structured Streaming query
-    folding each user's event types into a space-saving summary
-    (streaming.stateful.streaming_topk_items, TOPK_M=16 counters per
-    key in the state store), replayed to completion with availableNow.
+    """Streaming heavy hitters — the incremental counterpart of the
+    batch groupBy-count in heavy_hitters_topk: a REAL Structured
+    Streaming query folding each user's event types into a space-saving
+    summary (streaming.stateful.streaming_topk_items, TOPK_M=16
+    counters per key in the state store), replayed to completion with
+    availableNow.
     The final snapshot per user is selected by the emitted monotone
     ``n_seen`` (Σ est_count — the space-saving invariant that the
     counter total equals the items folded), then the opaque item hash

@@ -288,8 +288,9 @@ def _update_topk(
 
 
 def streaming_topk_items(events: DataFrame, group_col: str, item_col: str) -> DataFrame:
-    """Streaming heavy hitters per group — the incremental twin of
-    queries/relational.py:heavy_hitters_topk's two-pass batch shape.
+    """Streaming heavy hitters per group — the incremental counterpart
+    of queries/relational.py:heavy_hitters_topk, whose batch form is an
+    exact groupBy-count.
 
     Each group keeps a space-saving summary of TOPK_M counters in the
     state store; every trigger folds only that batch's items and re-emits
@@ -297,9 +298,8 @@ def streaming_topk_items(events: DataFrame, group_col: str, item_col: str) -> Da
     state is #groups × m triples — constant per group while the exact
     alternative grows with distinct items; the emitted est_count/max_err
     pair makes the approximation auditable downstream (est − err ≤ true
-    ≤ est). Exactness caveat (same family as the batch op's recall
-    bound): counts are exact whenever the group's distinct items ≤ m —
-    the regime the replay test pins.
+    ≤ est). Exactness caveat: counts are exact whenever the group's
+    distinct items ≤ m — the regime the replay test pins.
     """
     from pyspark.sql import functions as F
 

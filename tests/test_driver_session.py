@@ -36,16 +36,6 @@ def test_load_table_self_provisions_nanos_conf(spark):
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
-def test_arrow_batch_size_pinned(spark):
-    """heavy_hitters_topk's candidate-recall analysis assumes 10k-row
-    Arrow batches (queries/relational.py); the session factory pins the
-    conf so the verdict is config-independent (VERDICT r5 #6)."""
-    assert (
-        spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-        == "10000"
-    )
-
-
 def test_load_table_pins_utc(spark):
     prev = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")

@@ -173,8 +173,8 @@ def test_lr_confusion_margin_guard_at_driver_sf(spark):
 
 def test_threshold_prediction(spark):
     df = spark.range(1).select(
-        threshold_prediction(F.lit(0.84), 0.83).alias("hi"),
-        threshold_prediction(F.lit(0.82), 0.83).alias("lo"),
+        threshold_prediction(F.lit(0.84)).alias("hi"),
+        threshold_prediction(F.lit(0.82)).alias("lo"),
     )
     r = df.first()
     assert (r["hi"], r["lo"]) == (1, 0)

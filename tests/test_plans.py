@@ -467,9 +467,9 @@ def test_heavy_hitters_final_cut_is_topk_not_window(spark):
     """heavy_hitters_topk's final ranking must be TakeOrderedAndProject
     (per-partition top-10 heaps), never an unpartitioned row_number
     WindowExec that moves every key count to a single partition
-    (VERDICT r10 task 5). Asserted on the shared _hh_ordered_top10
-    helper both arms route through, and on the registered query's
-    returned plan (a 10-row LocalTableScan — no window anywhere)."""
+    (VERDICT r10 task 5). Asserted on the _hh_ordered_top10 cut the
+    query collects, and on the registered query's returned plan (a
+    10-row LocalTableScan — no window anywhere)."""
     from pyspark.sql import functions as F
 
     from log_analysis_bigdata_spark.catalog import load_table

@@ -28,6 +28,8 @@ from pyspark.sql import functions as F
 
 from tools.skew_fixture import make_tied_embeddings, make_zipf_events
 
+from .conftest import _jobs_run
+
 N_ROWS = 300_000
 SALT_BUCKETS = 16
 SHUFFLE_P = 32
@@ -250,14 +252,8 @@ def test_semdedup_zero_vectors_match_oracle(spark, tmp_path):
 
 
 def test_heavy_hitters_sketch_arm_exact_on_skew(spark, zipf_dir, monkeypatch):
-    """The r9 sf1 sweep showed the space-saving arm losing recall on
-    near-uniform keys; the fix gates it behind a cardinality check AND
-    a per-run completeness certificate. This test runs the SKETCH arm
-    directly on the genuinely Zipfian fixture — its home regime — and
-    requires (a) its top-10 to equal the exact answer and (b) the U
-    certificate to PASS there (10th count > U, so the sketch result is
-    provably complete, no fallback); it then verifies the registered
-    query (exact arm for this 40k-key corpus) returns the same rows."""
+    """On the Zipfian fixture (the top user owns ~38% of the rows) the
+    registered query returns exactly the groupBy-count top-10."""
     from log_analysis_bigdata_spark.queries import relational as R
 
     ev = _events(spark, zipf_dir).select("user_id")
@@ -268,15 +264,6 @@ def test_heavy_hitters_sketch_arm_exact_on_skew(spark, zipf_dir, monkeypatch):
         .limit(10)
         .collect()
     )
-    sk_counts, bound = R._hh_sketch_counts(ev)
-    sketch = (
-        sk_counts.orderBy(F.desc("n"), "user_id").limit(10).collect()
-    )
-    assert [tuple(r) for r in sketch] == [tuple(r) for r in exact]
-    assert sketch[-1]["n"] > bound  # certificate passes on real skew
-
-    # registered query on the same corpus: exact arm (40k keys < gate),
-    # same answer
     monkeypatch.setattr(R, "load_table", lambda s, d, t: ev)
     got = R.heavy_hitters_topk(spark, zipf_dir).collect()
     assert [(r["user_id"], r["n"]) for r in got] == [
@@ -284,53 +271,14 @@ def test_heavy_hitters_sketch_arm_exact_on_skew(spark, zipf_dir, monkeypatch):
     ]
 
 
-def test_heavy_hitters_sketch_certificate_forces_fallback_on_uniform(
-    spark, monkeypatch
-):
-    """Near-uniform keys are the distribution where per-batch local
-    top-m cannot rank near-ties (the r9 sf1 failure). Force the sketch
-    arm (gate at 0) on a uniform corpus and require the registered
-    query to still return the EXACT answer — the U certificate must
-    fail and trigger the exact-groupBy fallback, turning the old
-    silent wrong answer into a correct one."""
-    from log_analysis_bigdata_spark.queries import relational as R
-
-    # 60k rows over 20k near-uniform keys (count 3 each, +1 for a few)
-    ev = spark.range(60_000).selectExpr("id % 20000 AS user_id").select(
-        "user_id"
-    )
-    exact = (
-        ev.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), "user_id")
-        .limit(10)
-        .collect()
-    )
-    _sk, bound = R._hh_sketch_counts(ev)
-    assert bound >= 3  # certificate CANNOT pass: counts are all ~3
-
-    monkeypatch.setattr(R, "HH_EXACT_MAX_KEYS", 0)  # force sketch arm
-    monkeypatch.setattr(R, "load_table", lambda s, d, t: ev)
-    got = R.heavy_hitters_topk(spark, "unused").collect()
-    assert [(r["user_id"], r["n"]) for r in got] == [
-        (r["user_id"], r["n"]) for r in exact
-    ]
-
-
 def test_heavy_hitters_sketch_arm_counts_null_keys(spark, monkeypatch):
-    """ADVICE r9: pandas value_counts drops NaN and the recount
-    equi-join can't match NULL, so a NULL group used to be invisible to
-    the sketch arm — candidate list AND U bound both missed it. The fix
-    counts NULL exactly in the gate pass and unions it into the sketch
-    counts. Force the sketch arm on a corpus where NULL is a top-10
-    key and the skew is strong enough for the certificate to PASS (so
-    the exact fallback can't mask the bug) and require the NULL group
-    to appear with its exact count."""
+    """A NULL user_id is an ordinary group: on a corpus where NULL is a
+    top-10 key the query reports it with its exact count, placed by
+    the NULLS LAST tie-break DuckDB's oracle uses."""
     from log_analysis_bigdata_spark.queries import relational as R
 
     # NULL every 8th row (5,000 rows); the rest log2-bucketed — ~16
-    # keys with 2^k-style counts, so every Arrow batch holds < 50
-    # distinct keys, every t_b is 0, U = 0 and the certificate passes.
+    # keys with 2^k-style counts
     ev = spark.range(40_000).selectExpr(
         "CASE WHEN id % 8 = 0 THEN NULL"
         " ELSE CAST(log2(id + 1) AS BIGINT) END AS user_id"
@@ -344,7 +292,6 @@ def test_heavy_hitters_sketch_arm_counts_null_keys(spark, monkeypatch):
     )
     assert any(r["user_id"] is None for r in exact)  # NULL is top-10
 
-    monkeypatch.setattr(R, "HH_EXACT_MAX_KEYS", 0)  # force sketch arm
     monkeypatch.setattr(R, "load_table", lambda s, d, t: ev)
     got = R.heavy_hitters_topk(spark, "unused").collect()
     assert [(r["user_id"], r["n"]) for r in got] == [
@@ -352,6 +299,26 @@ def test_heavy_hitters_sketch_arm_counts_null_keys(spark, monkeypatch):
     ]
     null_rows = [r for r in got if r["user_id"] is None]
     assert len(null_rows) == 1 and null_rows[0]["n"] == 5_000
+
+
+def test_heavy_hitters_runs_only_the_top10_job(spark, zipf_dir, monkeypatch):
+    """Building heavy_hitters_topk runs no Spark job beyond collecting
+    its ordered top-10 cut: no gate or pre-pass over the events."""
+    from log_analysis_bigdata_spark.queries import relational as R
+
+    ev = _events(spark, zipf_dir).select("user_id")
+    counts = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
+    cut_jobs, cut = _jobs_run(
+        spark, "hh_cut", lambda: R._hh_ordered_top10(counts).collect()
+    )
+    monkeypatch.setattr(R, "load_table", lambda s, d, t: ev)
+    query_jobs, got = _jobs_run(
+        spark, "hh_query", lambda: R.heavy_hitters_topk(spark, zipf_dir)
+    )
+    assert query_jobs == cut_jobs
+    assert [(r["user_id"], r["n"]) for r in got.collect()] == [
+        (r["user_id"], r["n"]) for r in cut
+    ]
 
 
 def test_embedding_dup_class_collapse_component_equivalent(spark, tmp_path):

@@ -9,7 +9,6 @@ from __future__ import annotations
 import json
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from log_analysis_bigdata_spark.streaming.job import (
@@ -723,122 +722,6 @@ def test_stateful_ewma_rocksdb_state_store(spark, tmp_path):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
-
-
-def _has_protobuf() -> bool:
-    """The real dependency is google.protobuf, not the google namespace
-    package (ADVICE r5: any other google-* install would un-skip a test
-    that still can't run). find_spec on a dotted name raises if the
-    parent package is absent, hence the try."""
-    import importlib.util
-
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs protobuf for its state-server "
-    "(retried round 7, 2026-08-14: still no google.protobuf, no index) "
-    "wire protocol; not installed in this sandbox (module import + plan "
-    "construction still covered below via the classic-API twins)",
-)
-def test_transform_with_state_running_stats(spark, tmp_path):
-    """transformWithStateInPandas (the modern stateful API): named
-    ValueState accumulates across micro-batches on the RocksDB store."""
-    from log_analysis_bigdata_spark.streaming.transform_state import (
-        running_user_stats,
-    )
-
-    src = str(tmp_path / "tws_src")
-    os.makedirs(src)
-
-    def write_events(fname, rows):
-        with open(os.path.join(src, fname), "w") as f:
-            for uid, v in rows:
-                f.write(json.dumps({"user_id": uid, "value": v}) + "\n")
-
-    write_events("b0.json", [(7, 10.0), (7, 20.0), (8, 5.0)])
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        raw = spark.readStream.schema("user_id long, value double").json(src)
-        q = (
-            running_user_stats(raw).writeStream.outputMode("update")
-            .format("memory")
-            .queryName("tws_stats")
-            .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            write_events("b1.json", [(7, 30.0)])
-            q.processAllAvailable()
-            rows = spark.sql("select * from tws_stats").collect()
-            latest = {}
-            for r in rows:
-                cur = latest.get(r["user_id"])
-                if cur is None or r["n_events"] > cur["n_events"]:
-                    latest[r["user_id"]] = r
-            assert latest[7]["n_events"] == 3          # 2 + 1 across batches
-            assert latest[7]["sum_value"] == 60.0
-            assert latest[7]["min_value"] == 10.0
-            assert latest[7]["max_value"] == 30.0
-            assert latest[8]["n_events"] == 1
-        finally:
-            q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
-def test_transform_with_state_module_contract(spark):
-    """The protobuf-free half of the TWS contract: the processor class
-    satisfies the StatefulProcessor interface and its pure update logic
-    folds correctly across calls (what handleInputRows does per batch)."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    from log_analysis_bigdata_spark.streaming.transform_state import (
-        USER_STATS_OUTPUT,
-        RunningUserStatsProcessor,
-    )
-
-    proc = RunningUserStatsProcessor()
-    assert isinstance(proc, StatefulProcessor)
-    assert [f.name for f in USER_STATS_OUTPUT.fields] == [
-        "user_id", "n_events", "sum_value", "min_value", "max_value",
-    ]
-
-    class FakeValueState:
-        def __init__(self):
-            self.v = None
-        def exists(self):
-            return self.v is not None
-        def get(self):
-            return self.v
-        def update(self, v):
-            self.v = v
-
-    proc._stats = FakeValueState()
-    out1 = next(proc.handleInputRows(
-        (7,), iter([pd.DataFrame({"value": [10.0, 20.0]})]), None))
-    assert out1.iloc[0]["n_events"] == 2 and out1.iloc[0]["sum_value"] == 30.0
-    out2 = next(proc.handleInputRows(
-        (7,), iter([pd.DataFrame({"value": [30.0]})]), None))
-    assert out2.iloc[0]["n_events"] == 3          # state carried
-    assert out2.iloc[0]["min_value"] == 10.0
-    assert out2.iloc[0]["max_value"] == 30.0
 
 
 def test_stream_stream_join_is_symmetric_hash_with_watermarks(spark):
